@@ -2,11 +2,12 @@
 (schema/schema-global-combined.sql:42-108) — SURVEY.md §2.7.
 
 Each source projects the 11-col common subset (+ metadata), restricted to
-the 2-hour input window, then unions by name. `vertical_rate` is Int32 in
-the full schemas but Float32 in the combined table
-(schema-global-combined.sql:24) — cast on the way in.
+the 2-hour input window. `vertical_rate` is Int32 in the full schemas but
+Float32 in the combined table (schema-global-combined.sql:24) — cast on
+the way in (``schemas.combined_schema`` is the resulting table schema).
 
-UNION ALL is shuffle-free in Spark (plan concatenation); the downstream
+The UNION itself is the shared combined state: every source's pipeline
+upserts its projection there (streaming/pipeline.py), and the upsert's
 latest_per_key supplies the ReplacingMergeTree dedup.
 """
 
@@ -29,11 +30,3 @@ def to_combined(clean: DataFrame, *, now: Column | None = None, window: str = CO
     ]
     return recent.select(*cols)
 
-
-def combined_union(sources: list[DataFrame], *, now: Column | None = None) -> DataFrame:
-    """Fan-in of all cleaned sources into the combined stream."""
-    parts = [to_combined(s, now=now) for s in sources]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

@@ -975,8 +975,8 @@ def _adc_attach_lookups(cand: DataFrame, m: int) -> DataFrame:
     cols = {}
     for j in range(m):
         idx = F.col(f"code_{j}")
-        cols[f"pd_{j}"] = F.col(f"pda_{j}").getItem(idx)
-        cols[f"cn2_{j}"] = F.col(f"cna_{j}").getItem(idx)
+        cols[f"pd_{j}"] = F.col(f"pda_{j}")[idx]
+        cols[f"cn2_{j}"] = F.col(f"cna_{j}")[idx]
     drop = [f"pda_{j}" for j in range(m)] + [f"cna_{j}" for j in range(m)]
     return cand.withColumns(cols).drop(*drop)
 

@@ -21,7 +21,11 @@ Reproduces the reference's storage engines with Spark-native layout:
   TTL 1 HOUR` (schema/schema-local.sql:370-372) → keyed upsert: merge the
   incoming batch with existing state via `latest_per_key`, atomically
   swap. State is bounded by live-key count (~12k aircraft), so this stays
-  a small single-digit-MB table regardless of ingest volume.
+  a small single-digit-MB table regardless of ingest volume. Every
+  snapshot is `latest_per_key` output, so it holds exactly ONE row per
+  key: the ``*_latest`` views over it are a recency filter alone — no
+  second read-time dedup (the ``FINAL`` a ReplacingMergeTree needs
+  because its merges are lazy).
 - **TTL** (§4) — scheduled partition drops, matching
   `ttl_only_drop_parts=1`: whole `scrape_date=` directories are removed,
   never row-level rewrites.
@@ -52,8 +56,9 @@ import time
 import uuid
 from datetime import date, datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.latest import latest_per_key
 from .storeio import storeio_for
@@ -160,6 +165,12 @@ def _history_layout_groups(path: str) -> list[list[str]] | None:
     return groups
 
 
+def _reader(spark: SparkSession, schema: T.StructType | None) -> DataFrameReader:
+    """A parquet reader; with a known ``schema`` the scan skips the
+    footer-reading Spark job that schema inference costs per read."""
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
 def read_history(
     spark: SparkSession,
     path: str,
@@ -167,22 +178,25 @@ def read_history(
     dedupe: bool = False,
     key: str = "icao24",
     ts: str = "scrape_time",
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """History scan (the ``batch_id`` layout column is dropped — it is a
     sink implementation detail). Batch-keyed overwrite writes make the
     streaming pipeline's replays idempotent (append_history docstring),
     so counts are exact without ``dedupe``; the flag is kept for
     cross-pipeline merges and tables that mixed ad-hoc double-ingests.
-    Mixed old/new layouts read correctly (see _history_layout_groups)."""
+    Mixed old/new layouts read correctly (see _history_layout_groups).
+    ``schema`` is the stored data schema (partition columns are still
+    discovered from the paths); ``None`` infers it."""
     groups = _history_layout_groups(path)
     if groups is None:
-        df = spark.read.parquet(path)
+        df = _reader(spark, schema).parquet(path)
         if "batch_id" in df.columns:
             df = df.drop("batch_id")
     else:
         df = None
         for g in groups:
-            part = spark.read.option("basePath", path).parquet(*g)
+            part = _reader(spark, schema).option("basePath", path).parquet(*g)
             if "batch_id" in part.columns:
                 part = part.drop("batch_id")
             df = part if df is None else df.unionByName(part)
@@ -375,6 +389,15 @@ def upsert_state(
     docstring) — readers never observe a missing or half-written state
     dir, and concurrent per-source pipelines serialize instead of
     clobbering each other.
+
+    Invariant: the committed snapshot is `latest_per_key` output, one row
+    per `key`, so readers of the ``*_latest`` view only filter it by
+    recency (streaming/pipeline.py ``IngestPipeline.latest``).
+
+    The current snapshot is read with ``batch.schema`` (no inference
+    job). On schema drift, a batch column the stored snapshot lacks reads
+    as null for the stored rows, and a stored column the batch lacks is
+    dropped; before, ``unionByName`` raised on either.
     """
     spark = batch.sparkSession
     storeio_for(path).makedirs(path)
@@ -382,7 +405,7 @@ def upsert_state(
         cur = _current_snapshot_dir(path)
         candidates = batch
         if cur is not None:
-            candidates = spark.read.parquet(cur).unionByName(batch)
+            candidates = spark.read.schema(batch.schema).parquet(cur).unionByName(batch)
         merged = latest_per_key(candidates, key=key, version=version)
         if ttl is not None:
             now_col = F.lit(now).cast("timestamp") if now else F.current_timestamp()
@@ -395,12 +418,16 @@ def upsert_state(
         _gc_snapshots(path, keep=new_version, grace_s=gc_grace_s)
 
 
-def read_state(spark: SparkSession, path: str) -> DataFrame:
-    """Resolve the current snapshot pointer and scan it. Falls back to
-    reading `path` directly for pre-versioned layouts (and to surface the
-    standard missing-table error when nothing was ever committed)."""
+def read_state(
+    spark: SparkSession, path: str, *, schema: T.StructType | None = None
+) -> DataFrame:
+    """Resolve the current snapshot pointer and scan it — one row per key
+    (upsert_state). Falls back to reading `path` directly for
+    pre-versioned layouts (and to surface the standard missing-table
+    error when nothing was ever committed). ``schema`` is the stored
+    schema, which spares the inference job; ``None`` infers it."""
     snap = _current_snapshot_dir(path)
-    return spark.read.parquet(snap if snap else path)
+    return _reader(spark, schema).parquet(snap if snap else path)
 
 
 def expire_history(

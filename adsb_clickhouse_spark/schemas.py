@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from .config import Col, SourceConfig
+from .config import COMBINED_COLUMNS, LOCAL, SourceConfig
 
 # raw-layer Spark type per transform kind (Kafka JSON contract)
 _RAW_TYPES: dict[str, T.DataType] = {
@@ -90,16 +90,17 @@ def clean_schema(cfg: SourceConfig) -> T.StructType:
     return T.StructType(fields)
 
 
-def raw_column_names(cfg: SourceConfig) -> list[str]:
-    return [c.raw for c in cfg.columns]
-
-
-def clean_column_names(cfg: SourceConfig) -> list[str]:
-    return [c.clean for c in cfg.columns] + ["ingestion_time"]
-
-
-def column_by_clean_name(cfg: SourceConfig, name: str) -> Col:
-    for c in cfg.columns:
-        if c.clean == name:
-            return c
-    raise KeyError(name)
+def combined_schema() -> T.StructType:
+    """Combined-table schema (schema/schema-global-combined.sql:13-31):
+    the ``COMBINED_COLUMNS`` subset of the cleaned schema, identical in
+    every source, with ``vertical_rate`` as float — the cast
+    operators/combined.py applies on the way in."""
+    clean = {f.name: f for f in clean_schema(LOCAL)}
+    return T.StructType(
+        [
+            T.StructField(c, T.FloatType(), clean[c].nullable)
+            if c == "vertical_rate"
+            else clean[c]
+            for c in COMBINED_COLUMNS
+        ]
+    )

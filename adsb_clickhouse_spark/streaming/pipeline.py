@@ -42,10 +42,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import SourceConfig
+from ..config import COMBINED_FRESHNESS, SourceConfig
 from ..functions.cleanse import cleanse
 from ..operators.combined import to_combined
+from ..operators.latest import recency_filter
 from ..plans import tables
+from ..schemas import clean_schema, combined_schema
 
 
 def _checkpoint_run_id(checkpoint_dir: str) -> str:
@@ -156,8 +158,7 @@ class IngestPipeline:
             # crash-injection monkeypatching still intercepts them.
             from concurrent.futures import ThreadPoolExecutor
 
-            now_col = F.lit(self.now).cast("timestamp") if self.now else None
-            combined = to_combined(clean, now=now_col)
+            combined = to_combined(clean, now=self._now_col())
             with ThreadPoolExecutor(max_workers=3) as pool:
                 sinks = [
                     # MV 1: history append (schema-local.sql:199-293 →
@@ -266,17 +267,29 @@ class IngestPipeline:
 
     # -- query surface --------------------------------------------------------
 
-    def latest(self, spark) -> DataFrame:
-        """The positions_<source>_latest view (schema-local.sql:455-460)."""
-        from ..operators.latest import latest_view
+    def _now_col(self):
+        return F.lit(self.now).cast("timestamp") if self.now else None
 
-        now_col = F.lit(self.now).cast("timestamp") if self.now else None
-        state = tables.read_state(spark, self.state_path)
-        return latest_view(state, freshness=self.cfg.freshness, now=now_col)
+    def state(self, spark) -> DataFrame:
+        """The positions_<source>_replacing table: the current state
+        snapshot, read with its known schema (no inference job)."""
+        return tables.read_state(spark, self.state_path, schema=clean_schema(self.cfg))
+
+    def combined_state(self, spark) -> DataFrame:
+        """The shared positions_global_combined table's current snapshot."""
+        return tables.read_state(spark, self.combined_path, schema=combined_schema())
+
+    def latest(self, spark) -> DataFrame:
+        """The positions_<source>_latest view (schema-local.sql:455-460).
+        The snapshot already holds one row per key (upsert_state), so the
+        view is its recency filter alone — the ``LIMIT 1 BY`` of the
+        reference is a no-op here. ``operators.latest.latest_view`` over
+        the same snapshot returns the same rows."""
+        return recency_filter(self.state(spark), self.cfg.freshness, now=self._now_col())
 
     def combined_latest(self, spark) -> DataFrame:
-        from ..operators.latest import latest_view
-
-        now_col = F.lit(self.now).cast("timestamp") if self.now else None
-        state = tables.read_state(spark, self.combined_path)
-        return latest_view(state, freshness="5 minutes", now=now_col)
+        """positions_global_combined_latest (schema-global-combined.sql:119):
+        the combined snapshot's recency filter, as in ``latest``."""
+        return recency_filter(
+            self.combined_state(spark), COMBINED_FRESHNESS, now=self._now_col()
+        )

@@ -189,17 +189,84 @@ def test_streaming_cascade_file_source(spark, tmp_base):
     assert hist.count() >= state.count()
 
 
-def _raw_positions(spark, rows, ts):
-    """Minimal raw batch with controlled coordinates: (hex, lat, lon)."""
+def _raw_rows(spark, cfg, rows):
+    """Minimal raw batch of (hex, lat, lon, scrape_time) rows."""
     from adsb_clickhouse_spark.schemas import raw_schema
 
-    schema = raw_schema(GLOBAL_STREAM)
+    schema = raw_schema(cfg)
     dicts = [
         {"hex": h, "lat": la, "lon": lo, "scrape_time": ts, "source": "test"}
-        for h, la, lo in rows
+        for h, la, lo, ts in rows
     ]
     ordered = [[d.get(f.name) for f in schema.fields] for d in dicts]
     return spark.createDataFrame(ordered, schema)
+
+
+def _raw_positions(spark, rows, ts):
+    """Minimal raw batch with controlled coordinates: (hex, lat, lon)."""
+    return _raw_rows(spark, GLOBAL_STREAM, [(h, la, lo, ts) for h, la, lo in rows])
+
+
+def test_state_snapshots_hold_one_row_per_key(spark, tmp_base):
+    """The *_latest views only filter the state snapshots by recency
+    (IngestPipeline.latest); that is exact because every snapshot holds
+    one row per key. Pinned after each batch — through late arrivals,
+    same-time ties and TTL expiry — for the per-source and the combined
+    store: unique keys; the views equal latest_view (recency filter +
+    keyed argmax) over the same snapshot; the read with the known schema
+    returns what the inferring read returns."""
+    from datetime import timedelta
+
+    from adsb_clickhouse_spark.config import COMBINED_FRESHNESS
+    from adsb_clickhouse_spark.operators.latest import latest_view
+    from adsb_clickhouse_spark.schemas import clean_schema, combined_schema
+
+    def at(s):
+        return NOW + timedelta(seconds=s)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    batches = [
+        (at(0), [("aaa111", 1.0, 1.0, at(-4)), ("bbb222", 2.0, 2.0, at(-4)),
+                 ("ccc333", 3.0, 3.0, at(-30))]),
+        # a late arrival (aaa111 older than its state), a cross-batch tie
+        # on scrape_time (bbb222: the newer ingestion_time wins) and an
+        # in-batch tie (ddd444 twice at one scrape_time)
+        (at(5), [("aaa111", 9.0, 9.0, at(-20)), ("bbb222", 2.5, 2.5, at(-4)),
+                 ("ddd444", 4.0, 4.0, at(3)), ("ddd444", 4.5, 4.5, at(3))]),
+        # over an hour later: every earlier key passes the state TTL
+        (at(3700), [("eee555", 5.0, 5.0, at(3698))]),
+    ]
+    pipe = IngestPipeline(LOCAL, tmp_base, run_id="runK")
+    stores = [
+        (pipe.state_path, clean_schema(LOCAL), pipe.latest, LOCAL.freshness),
+        (pipe.combined_path, combined_schema(), pipe.combined_latest, COMBINED_FRESHNESS),
+    ]
+    lat_after, live_after = [], []
+    for i, (now, batch) in enumerate(batches):
+        pipe.now = now
+        pipe.process_batch(_raw_rows(spark, LOCAL, batch), batch_id=i)
+        for path, schema, view, freshness in stores:
+            inferred = tables.read_state(spark, path)
+            given = tables.read_state(spark, path, schema=schema)
+            assert given.schema == inferred.schema
+            snap = rows(inferred)
+            assert rows(given) == snap
+            keys = [r[0] for r in snap]
+            assert len(keys) == len(set(keys)), f"batch {i}: duplicate keys in {path}"
+            ref = latest_view(inferred, freshness=freshness, now=F.lit(now).cast("timestamp"))
+            got = view(spark)
+            assert got.columns == ref.columns
+            assert rows(got) == rows(ref), f"batch {i}: {path}"
+        lat_after.append({r["icao24"]: r["lat"] for r in pipe.state(spark).collect()})
+        live_after.append({r["icao24"] for r in pipe.latest(spark).collect()})
+    # the cases above happened: ccc333 stale for the 15 s view only,
+    # the late arrival ignored, the tie won by the newer batch, expiry
+    assert "ccc333" in lat_after[0] and live_after[0] == {"aaa111", "bbb222"}
+    assert lat_after[1]["aaa111"] == 1.0 and lat_after[1]["bbb222"] == 2.5
+    assert lat_after[1]["ddd444"] in (4.0, 4.5)
+    assert lat_after[2] == {"eee555": 5.0}
 
 
 def test_live_conflict_view_surfaces_and_clears(spark, tmp_base):
