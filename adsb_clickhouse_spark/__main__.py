@@ -321,7 +321,7 @@ def cmd_text_demo(args) -> int:
     from pyspark.sql import functions as F
 
     from .operators.similarity import hashed_text_embeddings
-    from .session import get_spark
+    from .session import get_spark, local_frame
     from .streaming.curation import CurationIngest
 
     spark = get_spark("text-demo")
@@ -347,7 +347,7 @@ def cmd_text_demo(args) -> int:
             rows.append((i, " ".join(w)))
         else:
             rows.append((i, " ".join(words(f"d{i}"))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     ing = CurationIngest(
         base,
         run_id="demo",
@@ -368,7 +368,7 @@ def cmd_text_demo(args) -> int:
     pw = words("d4")
     pw[2], pw[11] = "fresh", "probe"
     qdf = hashed_text_embeddings(
-        spark.createDataFrame([(9_999_999, " ".join(pw))], "doc_id long, text string"),
+        local_frame(spark, [(9_999_999, " ".join(pw))], "doc_id long, text string"),
         dim=dim,
     ).select(F.col("doc_id").alias("vec_id"), "embedding")
     hits = ing.knn(spark, qdf, k=3, nprobe=8).collect()

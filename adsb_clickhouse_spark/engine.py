@@ -27,6 +27,7 @@ from .operators.latest import stride_sample
 from .plans import tables
 from .plans.storeio import storeio_for
 from .schemas import clean_schema
+from .session import local_frame
 from .streaming.pipeline import IngestPipeline
 
 
@@ -219,8 +220,10 @@ class AdsbEngine:
                         [e for e in io.listdir(path) if e.startswith(tables.PARTITION_COL + "=")]
                     )
                 rows.append((f"positions_{name}", kind, n_rows, n_parts, n_files, n_bytes))
-        return self.spark.createDataFrame(
-            rows, "table string, kind string, rows long, partitions int, files int, bytes long"
+        return local_frame(
+            self.spark,
+            rows,
+            "table string, kind string, rows long, partitions int, files int, bytes long",
         )
 
     # -- maintenance (SURVEY §4: TTL + compaction jobs) --------------------

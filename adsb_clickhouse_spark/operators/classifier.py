@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.texttools import md5_long, tokens
+from ..session import local_frame
 
 
 def hashed_features(
@@ -125,7 +126,7 @@ def train_quality_classifier(
     try:
         for _ in range(int(n_iters)):
             w_rows = [(int(b_), float(w)) for b_, w in weights.items()] or [(-1, 0.0)]
-            w_df = spark.createDataFrame(w_rows, "bucket long, w double")
+            w_df = local_frame(spark, w_rows, "bucket long, w double")
             margins = (
                 feats.join(F.broadcast(w_df), "bucket", "left")
                 .groupBy("doc_id", "y")
@@ -180,7 +181,7 @@ def score_quality(
     w_rows = [(int(b_), float(w)) for b_, w in model["weights"].items()] or [
         (-1, 0.0)
     ]
-    w_df = spark.createDataFrame(w_rows, "bucket long, w double")
+    w_df = local_frame(spark, w_rows, "bucket long, w double")
     bias = float(model["bias"])
     feats = hashed_features(
         docs, text_col=text_col, id_col=id_col, n=n, n_buckets=n_buckets

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.texttools import md5_long, tokens
+from ..session import local_frame
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -77,16 +78,6 @@ def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, w: int) -> DataFr
     )
 
 
-def _shingle_index(docs: DataFrame, text_col: str, id_col: str, w: int) -> DataFrame:
-    """(id, shingle) rows, NON-distinct (duplicate shingles within a doc
-    pass through). Safe for its only consumer — minhash signatures,
-    where ``min()`` is insensitive to multiplicity — and skipping the
-    per-doc dedup avoids an aggregation exchange entirely."""
-    return _shingle_rows(docs, text_col, id_col, w).select(
-        "id", F.col("s").alias("shingle")
-    )
-
-
 def _hashed_shingle_index(docs: DataFrame, text_col: str, id_col: str, w: int) -> DataFrame:
     """(id, h) rows over 60-bit md5 shingle hashes, NON-distinct — the
     min-aggregate consumers (LSH minhash signatures) are insensitive to
@@ -125,23 +116,6 @@ def _xx_shingle_index(docs: DataFrame, text_col: str, id_col: str, w: int) -> Da
     )
 
 
-def _shingle_sizes(docs: DataFrame, text_col: str, id_col: str, w: int) -> DataFrame:
-    """|shingle-set| per doc as a count-distinct over the codegen row
-    index — one exchange on id, with the partial aggregate deduping
-    map-side (docs never span input tasks). The shuffle-free
-    alternative, sizing a transform-built shingle array, prices the interpreted
-    array-lambda on every doc and measured slower end-to-end; the
-    distinct count uses xxhash64 like the verify index (collisions
-    would shift a Jaccard denominator — same negligible-P,
-    loud-failure argument as _xx_shingle_index)."""
-    return (
-        _shingle_rows(docs, text_col, id_col, w)
-        .select("id", F.xxhash64("s").alias("h"))
-        .groupBy("id")
-        .agg(F.count_distinct("h").alias("n"))
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     *,
@@ -161,8 +135,8 @@ def ngram_jaccard_pairs(
     sh = _xx_shingle_index(docs, text_col, id_col, w)
     # |shingle set| per doc DERIVED from the index (r16): the index is
     # already distinct (id, h), so its per-id row count IS the set size
-    # — re-aggregating it replaces the second full corpus shingle pass
-    # (_shingle_sizes' explode + xxhash64 + count_distinct) with a
+    # — re-aggregating it replaces a second full corpus shingle pass
+    # (explode + xxhash64 + a per-doc count_distinct) with a
     # doc-sized re-agg whose subtree ReuseExchange shares with the join
     # sides. Sizes stay UNCAPPED (computed before the hot-shingle
     # window below), matching the oracle's denominator.
@@ -218,30 +192,6 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
         b = int(h[8:16], 16) % MINHASH_PRIME
         params.append((a, b))
     return params
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    w: int = 3,
-) -> DataFrame:
-    """(id, minhash_0..k-1): min over shingles of k universal hashes.
-
-    md5 is computed ONCE per shingle (the expensive part); the k
-    permutations are cheap integer arithmetic h_i = (a_i·h + b_i) mod p —
-    one explode + one groupBy with k min() aggregates, map-side partials.
-    """
-    sh = _shingle_index(docs, text_col, id_col, w).withColumn(
-        "h", md5_long(F.col("shingle")) % MINHASH_PRIME
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
-    return sh.groupBy("id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -708,7 +658,7 @@ def connected_components(
                 lo, hi = (ru, rv) if ru < rv else (rv, ru)
                 parent[hi] = lo
         rows = [(x, find(x)) for x in parent]
-        return pairs.sparkSession.createDataFrame(rows or [], "id long, comp long")
+        return local_frame(pairs.sparkSession, rows, "id long, comp long")
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .unionByName(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
@@ -971,7 +921,8 @@ def dedup_audit(
     n_common = truth.join(lsh, ["id_a", "id_b"], "left_semi").count()
     sample.unpersist()
     spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_sample,

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 PAGERANK_SCALE = 10**12
 # damping 0.85 as an exact rational so both engines do the same integer ops
 DAMPING_NUM = 17
@@ -275,7 +277,7 @@ def pagerank_multi(
             tuple([nd] + [per_name[name].get(nd, 0) for name in names])
             for nd in sorted(node_set)
         ]
-        return edges.sparkSession.createDataFrame(data, out_schema)
+        return local_frame(edges.sparkSession, data, out_schema)
 
     # loop-invariant tables are pinned ONCE regardless of `checkpoint`
     # (which governs only the per-round rank lineage): without this, the

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def latest_per_key(
     df: DataFrame,
@@ -95,7 +97,9 @@ def stride_sample(df: DataFrame, n: int, order_by: str | list[str]) -> DataFrame
        are the partition id, lower 33 bits a sequential per-partition
        record number — a free partition-local row_number.
     3. Per-partition counts (tiny: ≤ shuffle.partitions rows) collected to
-       the driver → cumulative offsets broadcast back.
+       the driver → cumulative offsets broadcast back as a
+       :func:`~adsb_clickhouse_spark.session.local_frame` (a local
+       relation: the join needs no Python worker and no extra job).
        global row_idx = offset[pid] + local_idx.
 
     The numbered layout is ``localCheckpoint``-ed before the count pass:
@@ -134,9 +138,7 @@ def stride_sample(df: DataFrame, n: int, order_by: str | list[str]) -> DataFrame
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    off_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__pid long, __offset long"
-    )
+    off_df = local_frame(df.sparkSession, offsets or [(0, 0)], "__pid long, __offset long")
     return (
         d.join(F.broadcast(off_df), "__pid")
         .withColumn(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def global_exclusive_prefix_sum(
     df: DataFrame,
@@ -41,7 +43,8 @@ def global_exclusive_prefix_sum(
     range-partition on the order columns, partition-local running sum
     via a ``__pid``-partitioned window, then per-partition totals
     (≤ ``spark.sql.shuffle.partitions`` rows) collected to the driver
-    and rebroadcast as offsets. The partitioned layout is
+    and rebroadcast as offsets, a local relation built by
+    :func:`~adsb_clickhouse_spark.session.local_frame`. The partitioned layout is
     ``localCheckpoint``-ed before the totals pass because
     ``repartitionByRange`` samples its boundaries — two evaluations of
     the same lineage may split rows differently, silently corrupting
@@ -68,7 +71,7 @@ def global_exclusive_prefix_sum(
     for pid, t in totals:
         offsets.append((pid, acc))
         acc += t or 0
-    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    off_df = local_frame(df.sparkSession, offsets or [(0, 0)], "__pid int, __off long")
     return (
         d.withColumn("__csum", F.sum("__v").over(w))
         .join(F.broadcast(off_df), "__pid")

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from ..functions.texttools import md5_long, tokens
 from ..plans.storeio import storeio_for
+from ..session import local_frame
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -455,7 +456,8 @@ def init_text_index(
     def build(out: str) -> None:
         os.makedirs(out, exist_ok=True)
         (
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(0, 0, B, bool(with_positions))],
                 "n_docs long, sum_dl long, n_buckets int, positional boolean",
             )
@@ -740,9 +742,7 @@ def bm25_probe_stored(
         )
         post = part if post is None else post.unionByName(part)
     if post is None:  # freshly-initialized empty index
-        return spark.createDataFrame(
-            [], "doc_id long, n_terms_matched long, score double"
-        )
+        return local_frame(spark, [], "doc_id long, n_terms_matched long, score double")
     idf = (
         post.groupBy("term")
         .agg(F.count("*").alias("df"))
@@ -891,9 +891,7 @@ def phrase_search(
     if m == 0:
         raise ValueError("phrase has no tokens under the corpus token law")
     spark = docs.sparkSession
-    ph = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(terms)], "i int, term string"
-    )
+    ph = local_frame(spark, list(enumerate(terms)), "i int, term string")
     if tfs is not None:
         if "positions" not in tfs.columns:
             raise ValueError(
@@ -987,15 +985,13 @@ def phrase_probe_stored(
         )
         post = part if post is None else post.unionByName(part)
     if post is None:  # freshly-initialized empty index
-        return spark.createDataFrame([], "doc_id long, n_matches long")
+        return local_frame(spark, [], "doc_id long, n_matches long")
     if "positions" not in post.columns:
         raise RuntimeError(
             f"index at {path} was built without positions "
             "(write_text_index(..., with_positions=True))"
         )
-    ph = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(terms)], "i int, term string"
-    )
+    ph = local_frame(spark, list(enumerate(terms)), "i int, term string")
     return (
         post.join(F.broadcast(ph), "term")
         .select(
@@ -1062,8 +1058,8 @@ def mmr_rerank(
         .collect()
     )
     if not rows:
-        return candidates.sparkSession.createDataFrame(
-            [], "doc_id long, mmr_rank int, rel double, mmr_score double"
+        return local_frame(
+            candidates.sparkSession, [], "doc_id long, mmr_rank int, rel double, mmr_score double"
         )
     ids = [r["doc_id"] for r in rows]
     rel = np.array([float(r["rel"]) for r in rows])
@@ -1088,8 +1084,8 @@ def mmr_rerank(
         out.append((ids[best], rank, float(rel[best]), float(mmr[best])))
         selected.append(best)
         max_sim = np.maximum(max_sim, unit @ unit[best])
-    return candidates.sparkSession.createDataFrame(
-        out, "doc_id long, mmr_rank int, rel double, mmr_score double"
+    return local_frame(
+        candidates.sparkSession, out, "doc_id long, mmr_rank int, rel double, mmr_score double"
     )
 
 
@@ -1187,7 +1183,7 @@ def retrieval_eval(
             raise ValueError(f"query {qid!r} has no tokens under the token law")
         qt_rows += [(qid, t) for t in terms]
     spark = docs.sparkSession
-    qt = spark.createDataFrame(qt_rows, "query_id string, term string")
+    qt = local_frame(spark, qt_rows, "query_id string, term string")
     all_terms = sorted({t for _, t in qt_rows})
 
     base = (
@@ -1277,9 +1273,7 @@ def retrieval_eval(
         .agg(F.sum("iterm").alias("idcg"))
     )
     n_rel = relv.groupBy("query_id").agg(F.count("*").alias("n_rel"))
-    qids = spark.createDataFrame(
-        [(qid,) for qid in queries], "query_id string"
-    )
+    qids = local_frame(spark, [(qid,) for qid in queries], "query_id string")
     return (
         qids.join(n_rel, "query_id", "left")
         .join(per_q_topk, "query_id", "left")

@@ -36,6 +36,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 DEFAULT_DIM = 64  # the driver's embeddings table width
 
 # cosine_near_dup_pairs collects the corpus to the driver to broadcast it;
@@ -223,7 +225,7 @@ def _bucketize_rows(qrows, planes):
     per-dimension accumulation over the same doubles, so buckets and
     norms are bit-identical to the worker pass — probe sets are bounded
     by contract, this is never a data collect. Returns (query_id, qv,
-    bucket, qn) tuples for ``createDataFrame`` (r15: replaces one
+    bucket, qn) tuples for :func:`local_frame` (r15: replaces one
     5-row mapInPandas Python stage per LSH probe with a local
     relation, the shape the ivf/pq probes already use)."""
     import numpy as np
@@ -246,24 +248,6 @@ def _bucketize_rows(qrows, planes):
         (r["query_id"], [float(x) for x in r["qv"]], int(b), float(n))
         for r, b, n in zip(qrows, bucket, norms)
     ]
-
-
-def lsh_bucket(vec: Column, planes: list[list[int]]) -> Column:
-    """Bucket id: bit p = (dot(vec, plane_p) >= 0).
-
-    Planes are ±1, so each dot is a plain signed sum of elements — an
-    explicit add chain that whole-stage codegen compiles, an order of
-    magnitude faster than a higher-order-function fold (and the exact
-    expression the DuckDB oracle uses, same left-to-right order)."""
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        dot = None
-        for d, w in enumerate(plane):
-            term = F.element_at(vec, d + 1)
-            term = term if w > 0 else -term
-            dot = term if dot is None else dot + term
-        bucket = bucket + F.when(dot >= 0, F.lit(2 ** p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
 
 
 def hash_corpus(
@@ -343,7 +327,8 @@ def ann_lsh(
         else hash_corpus(corpus, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col)
     )
     if qrows is not None:
-        q = corpus.sparkSession.createDataFrame(
+        q = local_frame(
+            corpus.sparkSession,
             _bucketize_rows(qrows, planes),
             "query_id long, qv array<double>, bucket long, qn double",
         )
@@ -436,7 +421,7 @@ def cosine_near_dup_pairs(
             "scale, or raise max_rows if the driver really has the memory."
         )
     if n == 0:
-        return spark.createDataFrame([], "id_a long, id_b long, cos_sim double")
+        return local_frame(spark, [], "id_a long, id_b long, cos_sim double")
     corpus_pdf = src.toPandas()
     ids = corpus_pdf["id"].to_numpy(dtype=np.int64)
     mat = np.stack(corpus_pdf["v"].to_numpy())  # (n, dim) float64
@@ -723,9 +708,7 @@ def ivf_search(
         d2 = _d2_fold(qv[None, :], cent)[0]
         for li in np.argsort(d2, kind="stable")[:nprobe]:
             probe_rows.append((r["query_id"], r["qv"], int(li)))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, qv array<double>, list_id int"
-    )
+    probes = local_frame(spark, probe_rows, "query_id long, qv array<double>, list_id int")
     dim = cent.shape[1]
     cand = (
         corpus.select(
@@ -965,7 +948,7 @@ def _adc_query_frame(spark, lookups, qnorms, m: int) -> DataFrame:
     schema = "query_id long, qn double, " + ", ".join(
         f"pda_{j} array<double>, cna_{j} array<double>" for j in range(m)
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _adc_attach_lookups(cand: DataFrame, m: int) -> DataFrame:
@@ -1243,7 +1226,8 @@ def _exact_rerank(
     from pyspark.sql import Window
 
     qn_map = dict(qnorms)
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [
             (r["query_id"], [float(x) for x in r["qv"]], qn_map[r["query_id"]])
             for r in qrows
@@ -1313,7 +1297,7 @@ def ivfpq_search(
     probe_rows, lookups, qnorms, m = _ivfpq_query_state(
         coarse, pq_cents, qrows, nprobe=nprobe
     )
-    probes = spark.createDataFrame(probe_rows, "query_id long, list_id int")
+    probes = local_frame(spark, probe_rows, "query_id long, list_id int")
     cand = indexed.withColumnsRenamed({"id": "neighbor_id"}).join(
         F.broadcast(probes), "list_id"
     )
@@ -1359,7 +1343,7 @@ def ivfpq_probe_stored(
     probe_rows, lookups, qnorms, m = _ivfpq_query_state(
         coarse, pq_cents, qrows, nprobe=nprobe
     )
-    probes = spark.createDataFrame(probe_rows, "query_id long, list_id int")
+    probes = local_frame(spark, probe_rows, "query_id long, list_id int")
     lists = sorted({li for _, li in probe_rows})
     scan = probe_ann_layout(spark, path, lists, key_col="list_id")
     if rerank and "v" not in scan.columns:

@@ -67,6 +67,7 @@ from ..plans.genstore import (
     snapshot_view as _snapshot_view,
 )
 from ..plans.storeio import storeio_for
+from ..session import local_frame
 from .similarity import _d2_fold, _id_as_long, _nonzero_norm, as_double, cosine
 
 VEC_SCHEMA = "id long, v array<double>, list_id int"
@@ -94,7 +95,8 @@ def _read_centroids(spark: SparkSession, path: str, gen: str):
 
 
 def _write_centroids(spark: SparkSession, out: str, cent) -> None:
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
         "list_id int, c array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out, "centroids"))
@@ -321,9 +323,7 @@ def knn_probe_stored(
         d2 = _d2_fold(qv[None, :], cent)[0]
         for li in np.argsort(d2, kind="stable")[:nprobe]:
             probe_rows.append((r["query_id"], r["qv"], int(li)))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, qv array<double>, list_id int"
-    )
+    probes = local_frame(spark, probe_rows, "query_id long, qv array<double>, list_id int")
     needed = sorted({r[2] for r in probe_rows})
     # Segments assigned under the CURRENT generation prune on list_id;
     # a segment whose recorded generation differs (an append that raced
@@ -351,9 +351,7 @@ def knn_probe_stored(
     cand = _union_reads(pruned_parts)
     stale = _union_reads(stale_parts)
     if cand is None and stale is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cos_sim double"
-        )
+        return local_frame(spark, [], "query_id long, neighbor_id long, rank int, cos_sim double")
     pairs = None
     if cand is not None:
         pairs = (
@@ -362,7 +360,8 @@ def knn_probe_stored(
             .select("id", "v", "query_id", "qv")
         )
     if stale is not None:
-        q_df = spark.createDataFrame(
+        q_df = local_frame(
+            spark,
             list({r[0]: (r[0], r[1]) for r in probe_rows}.values()),
             "query_id long, qv array<double>",
         )

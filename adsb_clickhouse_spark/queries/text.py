@@ -989,7 +989,9 @@ def _duck_lm_bpe_sql() -> str:
         "joins + a doc-keyed sum, head/middle/tail terciles by VALUE "
         "thresholds with strict comparisons (ties never split; a "
         "boundary-spanning tie sinks to the worse bucket). Branches "
-        "timed separately in BENCH_DELTA.json."
+        "timed separately in BENCH_DELTA.json. The oracle embeds the "
+        "merge list learned on sf0.01, so it is valid at sf0.01 only: "
+        "on other tables the 'bpe' rows differ from it by design."
     ),
 )
 def text_lm_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,13 +4,30 @@ Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same configs are
 what we would ship to a 1000-executor cluster (AQE on, UTC session TZ, Arrow
 enabled, shuffle partitions sized to parallelism rather than the 200
 default).
+
+Every small driver-side DataFrame (panel results, offset tables, probe
+and query rows, driver fast-path results, test fixtures) is built by
+:func:`local_frame`, never by ``spark.createDataFrame(<list>)``. In
+PySpark 4.1 classic a list becomes a pickled Python RDD, and every
+action over it runs one Python-worker task per partition. The Arrow
+table that ``local_frame`` builds becomes a ``LocalRelation`` instead:
+no Python worker and no Spark job until the frame meets distributed
+data. On a 4-vCPU host (``local[2]``, 8 rows, then ``collect()``), the
+list path cost 0.742 CPU-s and 0.425 s wall per call and ran one job;
+the Arrow path cost 0.041 CPU-s and 0.040 s and ran none.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 
 def default_parallelism() -> int:
@@ -66,3 +83,30 @@ def get_spark(app_name: str = "adsb_clickhouse_spark", *, shuffle_partitions: in
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows``, as an Arrow ``LocalRelation``.
+
+    Returns the same rows and schema as ``spark.createDataFrame(rows,
+    schema)``; ``schema`` is a DDL string or a ``StructType``. Each row is
+    first checked by the verifier ``createDataFrame`` uses, so a wrong type
+    or a ``None`` in a non-nullable field still raises. Naive datetimes in
+    timestamp fields are read as local time, as ``createDataFrame`` reads
+    them (the Arrow path alone would read them in the session time zone).
+    """
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    rows = list(rows)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, struct.fields, arrow_schema):
+        if isinstance(field.dataType, T.TimestampType):
+            values = [None if v is None else v.astimezone(timezone.utc) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), struct)

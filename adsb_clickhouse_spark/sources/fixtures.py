@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import GLOBAL_OPENSKY, SourceConfig
 from ..schemas import raw_schema
+from ..session import local_frame
 
 _BASE = datetime(2026, 1, 15, 12, 0, 0)
 
@@ -124,8 +125,7 @@ def edge_rows(cfg: SourceConfig, now: datetime = _BASE) -> list[dict]:
     return rows
 
 
-def raw_batch(
-    spark: SparkSession,
+def raw_rows(
     cfg: SourceConfig,
     *,
     n_aircraft: int = 100,
@@ -134,8 +134,8 @@ def raw_batch(
     now: datetime = _BASE,
     seed: int = 42,
     with_edges: bool = True,
-) -> DataFrame:
-    """A deterministic multi-scrape raw batch for one source."""
+) -> list[list]:
+    """The rows of :func:`raw_batch`, in ``raw_schema(cfg)`` field order."""
     rng = random.Random(seed)
     rows: list[dict] = []
     for s in range(n_scrapes):
@@ -144,6 +144,11 @@ def raw_batch(
             rows.append(_rand_row(cfg, rng, f"ac{i:05x}", ts))
     if with_edges:
         rows.extend(edge_rows(cfg, now))
-    schema = raw_schema(cfg)
-    ordered = [[row.get(f.name) for f in schema.fields] for row in rows]
-    return spark.createDataFrame(ordered, schema)
+    names = raw_schema(cfg).fieldNames()
+    return [[row.get(n) for n in names] for row in rows]
+
+
+def raw_batch(spark: SparkSession, cfg: SourceConfig, **kwargs) -> DataFrame:
+    """A deterministic multi-scrape raw batch for one source; ``kwargs``
+    are :func:`raw_rows`'."""
+    return local_frame(spark, raw_rows(cfg, **kwargs), raw_schema(cfg))

@@ -1315,6 +1315,9 @@ class CurationIngest:
                 # createDataFrame([row]).write job measured 4-5 s of
                 # pure overhead (Python-RDD conversion + job scheduling)
                 # for one row — ~20% of the all-stores per-batch floor.
+                # session.local_frame is the general fix for the
+                # Python-RDD part; this write stays driver-side because
+                # a Spark write of even a local relation is still a job.
                 self._write_stats_row_driver_side(
                     self._ingest_stats_row(taps), seg
                 )
