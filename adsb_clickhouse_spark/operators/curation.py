@@ -25,7 +25,7 @@ Scale shape of the composed pipeline, stage by stage:
 - packing: two-pass exact global prefix sum (range shuffle + broadcast
   offsets), never a single-task window.
 
-The ``filtered`` boundary is persisted by default: it feeds the shingle
+The ``filtered`` boundary is always persisted: it feeds the shingle
 index, the component join AND the packing pass, and re-deriving the
 regex/signal projection three times is the one genuinely wasteful
 recompute in the lineage. Callers at cluster scale should replace the
@@ -203,70 +203,21 @@ def langid_signals(
     )
 
 
-def _bigram_rep_arrow(tk_frame: DataFrame) -> DataFrame:
-    """(doc_id, top_c, dup_c) from (doc_id, tk): the Gopher repetition
-    counts, computed per-doc-locally in one mapInPandas pass — bigram
-    counting is a pure function of one document's token array, so the
-    bigram rows never exist as Spark rows and the two corpus-bigram-
-    sized exchanges of the groupBy kernel disappear (r15, guide
-    §2.4/§4.2; same move as the winnow arrow kernel). Bigram law
-    matches the groupBy kernel exactly: ``concat_ws(' ', tk[i-1],
-    tk[i])`` = ``' '.join`` — integer counts, no float anywhere. Docs
-    with <2 tokens emit nothing (the groupBy kernel filters them), so
-    the caller's left join fills their counts with 0."""
-    from . import fanout
-
-    def compute(batches):
-        import collections
-
-        import pandas as pd
-
-        for pdf in batches:
-            ids: list = []
-            tops: list = []
-            dups: list = []
-            for doc_id, tk in zip(pdf["doc_id"], pdf["tk"]):
-                if tk is None or len(tk) < 2:
-                    continue
-                counts = collections.Counter(
-                    tk[i - 1] + " " + tk[i] for i in range(1, len(tk))
-                )
-                ids.append(doc_id)
-                tops.append(max(counts.values()))
-                dups.append(sum(c for c in counts.values() if c > 1))
-            if ids:
-                yield pd.DataFrame(
-                    {"doc_id": ids, "top_c": tops, "dup_c": dups}
-                )
-
-    return fanout(tk_frame).mapInPandas(
-        compute, "doc_id long, top_c long, dup_c long"
-    )
-
-
 def quality_signals(
     docs: DataFrame,
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    rep_kernel: str = "groupby",
 ) -> DataFrame:
     """(doc_id, stopword_ratio, unique_ratio, mean_token_len,
     top_bigram_frac, dup_bigram_frac, quality_score, bag_fingerprint,
     exact_fingerprint): quality + Gopher repetition + fingerprints.
 
     Plan: one codegen projection pass for the ratio/score/fingerprint
-    columns; the repetition signals come from one of two kernels with
-    identical rows (pinned by tests/test_curation.py::
-    test_quality_rep_kernels_agree), joined back on doc_id:
-
-    - ``rep_kernel="groupby"``: position-explode → element_at bigram
-      rows → two-level groupBy (partial agg; a `transform`-built
-      bigram array evaluates interpreted per element, measured ~4×
-      slower at sf0.1). Pays two corpus-bigram-sized exchanges.
-    - ``rep_kernel="arrow"`` (r15): per-doc mapInPandas counting —
-      see :func:`_bigram_rep_arrow`; the join back becomes doc-count
-      sized on both sides and no bigram row ever shuffles.
+    columns; the repetition signals come from position-explode →
+    element_at bigram rows → two-level groupBy (partial agg; a
+    `transform`-built bigram array evaluates interpreted per element,
+    measured ~4× slower at sf0.1), joined back on doc_id.
 
     Total bigram count is derived as n_tokens-1 in the projection —
     not aggregated (see the text_quality driver row's doc)."""
@@ -284,34 +235,29 @@ def quality_signals(
     tk_frame = docs.select(
         F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("tk")
     )
-    if rep_kernel == "arrow":
-        rep = _bigram_rep_arrow(tk_frame)
-    elif rep_kernel != "groupby":
-        raise ValueError(f"unknown rep kernel {rep_kernel!r}")
-    else:
-        rep = (
-            tk_frame.filter(F.size("tk") >= 2)
-            .select(
-                "doc_id", "tk", F.explode(F.sequence(F.lit(2), F.size("tk"))).alias("i")
-            )
-            .select(
-                "doc_id",
-                F.concat_ws(
-                    " ",
-                    F.element_at("tk", F.col("i") - 1),
-                    F.element_at("tk", F.col("i")),
-                ).alias("bg"),
-            )
-            .groupBy("doc_id", "bg")
-            .count()
-            .groupBy("doc_id")
-            .agg(
-                F.max("count").alias("top_c"),
-                F.sum(
-                    F.when(F.col("count") > 1, F.col("count")).otherwise(F.lit(0))
-                ).alias("dup_c"),
-            )
+    rep = (
+        tk_frame.filter(F.size("tk") >= 2)
+        .select(
+            "doc_id", "tk", F.explode(F.sequence(F.lit(2), F.size("tk"))).alias("i")
         )
+        .select(
+            "doc_id",
+            F.concat_ws(
+                " ",
+                F.element_at("tk", F.col("i") - 1),
+                F.element_at("tk", F.col("i")),
+            ).alias("bg"),
+        )
+        .groupBy("doc_id", "bg")
+        .count()
+        .groupBy("doc_id")
+        .agg(
+            F.max("count").alias("top_c"),
+            F.sum(
+                F.when(F.col("count") > 1, F.col("count")).otherwise(F.lit(0))
+            ).alias("dup_c"),
+        )
+    )
     nt = F.greatest(F.col("n_tokens"), F.lit(1))
     nbg = F.greatest(F.col("n_tokens") - 1, F.lit(1))
     return m.join(rep, "doc_id", "left").select(
@@ -548,7 +494,6 @@ def curate_documents(
     redact: bool = True,
     dedup_threshold: float = 0.5,
     pack_budget: int = 512,
-    persist_filtered: bool = True,
     apply_domain_mixture: bool = False,
     domain_col: str = "source",
     mixture_alpha: float = MIX_ALPHA,
@@ -823,9 +768,7 @@ def curate_documents(
                 ).alias("c")
             ).collect()[0]["c"]
             cond = cond & (F.col("host_pagerank_fp") >= F.lit(cutoff))
-    filtered = scored.filter(cond)
-    if persist_filtered:
-        filtered = filtered.persist()
+    filtered = scored.filter(cond).persist()
 
     pairs = minhash_lsh_pairs(
         filtered, text_col="clean_text", id_col="doc_id", threshold=dedup_threshold

@@ -863,19 +863,13 @@ def phrase_search(
     text_col: str = "text",
     id_col: str = "doc_id",
     tokenized: DataFrame | None = None,
-    tfs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-phrase match: (doc_id, n_matches) for documents containing
     the token sequence of ``phrase``, ordered by (matches desc, doc_id),
     top-``k``.
 
-    ``tfs`` reuses a POSITIONAL :func:`doc_term_freqs` frame
-    (``with_positions=True``) covering at least the phrase's terms:
-    exploding each term row's sorted positions reproduces exactly the
-    (doc, pos) rows the token-stream path emits for those terms — one
-    row per source occurrence — so the slot join is fed identical
-    candidates without a second corpus-wide explode (r15 shared-subtree
-    path; callers sharing one frame across bm25/eval/phrase).
+    ``tokenized`` (from :func:`tokenize_docs`) skips the tokenize
+    projection — same law, shared subtree.
 
     Slot-join formulation: broadcast the tiny (slot i, term) phrase
     table onto the position-exploded token stream (term-filtered BY the
@@ -892,16 +886,7 @@ def phrase_search(
         raise ValueError("phrase has no tokens under the corpus token law")
     spark = docs.sparkSession
     ph = local_frame(spark, list(enumerate(terms)), "i int, term string")
-    if tfs is not None:
-        if "positions" not in tfs.columns:
-            raise ValueError(
-                "phrase_search(tfs=...) needs a positional frame — build "
-                "it with doc_term_freqs(with_positions=True)"
-            )
-        tok = tfs.filter(F.col("term").isin(terms)).select(
-            "doc_id", "term", F.explode("positions").alias("pos")
-        )
-    elif tokenized is not None:
+    if tokenized is not None:
         tok = tokenized.select(
             "doc_id", F.posexplode("toks").alias("pos", "term")
         )

@@ -36,11 +36,10 @@ void every crash-safety argument. So the seam is explicit:
   with the method-by-method mapping to S3 conditional writes and
   DynamoDB in its docstrings. Register it for a scheme
   (:func:`register_scheme`) or, for hybrid local-data/CAS-metadata
-  runs, a path prefix (:func:`register_prefix`);
-- :class:`MemStoreIO` is the in-process fake the contract tests run
-  against (register it under a scheme with :func:`register_scheme`),
-  proving the callers depend only on the interface semantics, not on
-  the POSIX filesystem behind it.
+  runs, a path prefix (:func:`register_prefix`). Over
+  :class:`MemCASBackend` under a scheme path it is also the in-process
+  fake the contract tests run against, proving the callers depend only
+  on the interface semantics, not on the POSIX filesystem behind it.
 
 Data-plane I/O (parquet segment reads/writes) is NOT behind this seam —
 Spark's own Hadoop filesystem layer already abstracts that correctly;
@@ -171,7 +170,7 @@ class StoreIO:
     # atomically at ``final``. Expressed as its own seam operation, each
     # implementation commits the way its namespace is good at:
     #
-    # - POSIX/Mem (this default): stage in a dot-prefixed sibling dir,
+    # - POSIX (this default): stage in a dot-prefixed sibling dir,
     #   commit by ONE atomic os.rename — free, and exactly the protocol
     #   the engine always used;
     # - CAS (override below): mask ``final`` with a pending marker and
@@ -353,7 +352,7 @@ class LocalStoreIO(StoreIO):
         if os.path.isdir(path):
             # getsize on a dir returns the inode size (4096) — a
             # meaningless answer for the contract's "size of a file";
-            # raising matches the fakes (r14 differential test)
+            # raising matches the CAS port (r14 differential test)
             raise IsADirectoryError(path)
         return os.path.getsize(path)
 
@@ -441,240 +440,6 @@ def _glob_regex(pattern: str):
         else:
             out.append(re.escape(ch))
     return re.compile("^" + "".join(out) + "$")
-
-
-class MemStoreIO(StoreIO):
-    """In-memory fake for contract tests — same atomicity semantics
-    (a per-instance lock makes every namespace mutation one indivisible
-    step, which is exactly what the POSIX primitives guarantee), zero
-    filesystem. Register under a scheme (``mem://``) so the production
-    call sites resolve it through :func:`storeio_for` unchanged."""
-
-    def __init__(self) -> None:
-        self._lock = threading.Lock()
-        self._files: dict[str, str] = {}
-        self._dirs: set[str] = set()
-        self._meta: dict[str, tuple[float, int]] = {}  # path -> (mtime, seq)
-        self._seq = 0
-
-    @staticmethod
-    def _norm(path: str) -> str:
-        return path.rstrip("/")
-
-    def _touch(self, path: str) -> None:
-        self._seq += 1
-        self._meta[path] = (time.time(), self._seq)
-
-    def _add_parents(self, path: str) -> None:
-        parent = path.rsplit("/", 1)[0]
-        while parent and not parent.endswith(":/"):
-            self._dirs.add(parent)
-            if "/" not in parent:
-                break
-            parent = parent.rsplit("/", 1)[0]
-
-    def _require_parent(self, path: str) -> None:
-        # POSIX parity (r13 advice): open() under a nonexistent parent
-        # raises FileNotFoundError on LocalStoreIO; the fake must not
-        # silently auto-create what the real filesystem refuses, or
-        # callers proven against it still fail on POSIX.
-        parent = path.rsplit("/", 1)[0] if "/" in path else ""
-        if not parent or parent.endswith(":/"):
-            return  # scheme root — always "exists"
-        if parent not in self._dirs:
-            raise FileNotFoundError(parent)
-
-    # -- reads ----------------------------------------------------------
-    def read_text(self, path: str) -> str:
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._files:
-                raise FileNotFoundError(path)
-            return self._files[path]
-
-    def listdir(self, path: str) -> list[str]:
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._dirs:
-                raise FileNotFoundError(path)
-            prefix = path + "/"
-            out = set()
-            for p in list(self._files) + list(self._dirs):
-                if p.startswith(prefix):
-                    out.add(p[len(prefix):].split("/", 1)[0])
-            return sorted(out)
-
-    def isdir(self, path: str) -> bool:
-        with self._lock:
-            return self._norm(path) in self._dirs
-
-    def exists(self, path: str) -> bool:
-        path = self._norm(path)
-        with self._lock:
-            return path in self._files or path in self._dirs
-
-    def mtime(self, path: str) -> float:
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._meta:
-                raise FileNotFoundError(path)
-            return self._meta[path][0]
-
-    def touch(self, path: str) -> None:
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._meta:
-                raise FileNotFoundError(path)
-            self._touch(path)
-
-    def stat_token(self, path: str):
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._meta:
-                raise FileNotFoundError(path)
-            return self._meta[path]
-
-    @staticmethod
-    def _glob_regex(pattern: str):
-        return _glob_regex(pattern)
-
-    def glob(self, pattern: str) -> list[str]:
-        rx = self._glob_regex(self._norm(pattern))
-        with self._lock:
-            names = set(self._files) | set(self._dirs)
-            return sorted(p for p in names if rx.match(p))
-
-    def has_files(self, path: str, suffix: str) -> bool:
-        prefix = self._norm(path) + "/"
-        with self._lock:
-            return any(
-                p.startswith(prefix) and p.endswith(suffix)
-                for p in self._files
-            )
-
-    # -- writes ---------------------------------------------------------
-    def write_atomic(self, path: str, text: str) -> None:
-        path = self._norm(path)
-        with self._lock:
-            if path in self._dirs:
-                # POSIX parity (r14 differential property test):
-                # os.replace onto an existing dir raises; the fake
-                # silently shadowed the dir with a file
-                raise IsADirectoryError(path)
-            self._require_parent(path)
-            self._files[path] = text
-            self._touch(path)
-
-    def create_exclusive(self, path: str, text: str) -> tuple[bool, str]:
-        path = self._norm(path)
-        with self._lock:
-            if path in self._dirs:
-                raise IsADirectoryError(path)
-            if path in self._files:
-                return False, self._files[path]
-            self._require_parent(path)
-            self._files[path] = text
-            self._touch(path)
-            return True, text
-
-    def unlink(self, path: str) -> None:
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._files:
-                raise FileNotFoundError(path)
-            del self._files[path]
-            self._meta.pop(path, None)
-
-    def unlink_if(self, path: str, token) -> bool:
-        path = self._norm(path)
-        with self._lock:  # one indivisible compare-and-delete
-            if self._meta.get(path) != token or path not in self._files:
-                return False
-            del self._files[path]
-            del self._meta[path]
-            return True
-
-    def file_size(self, path: str) -> int:
-        path = self._norm(path)
-        with self._lock:
-            if path not in self._files:
-                raise FileNotFoundError(path)
-            return len(self._files[path])
-
-    def makedirs(self, path: str) -> None:
-        path = self._norm(path)
-        with self._lock:
-            # POSIX parity (r14 differential property test): a FILE at
-            # the path or any ancestor makes os.makedirs raise
-            probe = path
-            while probe and not probe.endswith(":/"):
-                if probe in self._files:
-                    raise FileExistsError(probe)
-                if "/" not in probe:
-                    break
-                probe = probe.rsplit("/", 1)[0]
-            self._dirs.add(path)
-            self._add_parents(path)
-            self._touch(path)
-
-    def rmtree(self, path: str) -> None:
-        path = self._norm(path)
-        prefix = path + "/"
-        with self._lock:
-            if path in self._files:
-                # POSIX parity (r14 differential property test):
-                # shutil.rmtree on a FILE is a no-op under
-                # ignore_errors — the fake used to delete it
-                return
-            for p in [k for k in self._files if k.startswith(prefix)]:
-                del self._files[p]
-                self._meta.pop(p, None)
-            for d in [k for k in self._dirs if k == path or k.startswith(prefix)]:
-                self._dirs.discard(d)
-                # dir meta must die with the dir, or mtime()/stat_token()
-                # keep answering for deleted paths — diverging from the
-                # POSIX implementation's OSError (r13 review)
-                self._meta.pop(d, None)
-
-    def rename(self, src: str, dst: str) -> None:
-        src, dst = self._norm(src), self._norm(dst)
-        sp = src + "/"
-        with self._lock:
-            if src not in self._files and src not in self._dirs:
-                raise FileNotFoundError(src)
-            if src == dst:
-                return  # POSIX: same-path rename is a successful no-op
-            if dst.startswith(sp):
-                # POSIX EINVAL: cannot move a directory into itself
-                raise OSError(f"rename into own subtree: {src} -> {dst}")
-            dparent = dst.rsplit("/", 1)[0] if "/" in dst else ""
-            if dparent and not dparent.endswith(":/"):
-                if dparent in self._files:
-                    raise NotADirectoryError(dparent)
-                if dparent not in self._dirs:
-                    raise FileNotFoundError(dparent)
-            if src in self._dirs and (dst in self._dirs or dst in self._files):
-                raise OSError(f"rename target exists: {dst}")
-            if src in self._files and dst in self._dirs:
-                # POSIX parity (r13 advice): os.rename(file, existing
-                # dir) raises; silently clobbering the dir diverged
-                raise IsADirectoryError(dst)
-            self._add_parents(dst)
-            if src in self._files:
-                self._files[dst] = self._files.pop(src)
-                self._meta[dst] = self._meta.pop(src)
-                self._touch(dst)
-                return
-            for p in [k for k in self._files if k.startswith(sp)]:
-                self._files[dst + p[len(src):]] = self._files.pop(p)
-                self._meta[dst + p[len(src):]] = self._meta.pop(p)
-            for d in [k for k in self._dirs if k == src or k.startswith(sp)]:
-                self._dirs.discard(d)
-                self._dirs.add(dst + d[len(src):])
-                meta = self._meta.pop(d, None)
-                if meta is not None:
-                    self._meta[dst + d[len(src):]] = meta
-            self._touch(dst)
 
 
 # --------------------------------------------------------------------------
@@ -1401,7 +1166,7 @@ _PREFIXES: dict[str, StoreIO] = {}
 
 def register_scheme(scheme: str, io: StoreIO) -> None:
     """Bind a URI scheme to a StoreIO implementation (tests register
-    ``mem`` and ``cas-test``; a real object-store port would register
+    ``cas-test``; a real object-store port would register
     ``s3`` with :class:`CASStoreIO` over a DynamoDB/etcd backend and
     thereby lift the guard)."""
     _SCHEMES[scheme.lower()] = io

@@ -58,6 +58,12 @@ def get_spark(app_name: str = "adsb_clickhouse_spark", *, shuffle_partitions: in
       driver time with it on and 0.17 s with it off. The only loss is the Python call-site
       fragment in error query contexts; plans are unchanged. It is a
       static conf, so it has to be set here, before the session exists.
+    - ``spark.driver.memory`` — ``SPARK_GRAFT_DRIVER_MEM``, default 16g. In
+      local mode the driver JVM runs every task, and its heap may grow to
+      this cap: on a 16 GB host that is all of RAM, and with two test
+      runs at once (one JVM at 7.2 GB RSS) the other run's JVM died. On
+      such a host run one Spark process at a time, or give each one a
+      smaller cap through ``SPARK_GRAFT_DRIVER_MEM`` (e.g. ``4g``).
     """
     n = shuffle_partitions if shuffle_partitions is not None else default_parallelism()
     builder = (

@@ -25,16 +25,6 @@ from ..config import SourceConfig
 from .json_source import parse_kafka_value
 
 
-def kafka_available(spark: SparkSession) -> bool:
-    try:
-        spark.readStream.format("kafka").option("subscribe", "x").option(
-            "kafka.bootstrap.servers", "localhost:9092"
-        ).load()
-        return True
-    except Exception as exc:  # noqa: BLE001
-        return "Failed to find data source" not in str(exc)
-
-
 def kafka_stream(
     spark: SparkSession,
     cfg: SourceConfig,

@@ -365,7 +365,6 @@ class CurationIngest:
         host_trust_seeds: list | None = None,
         host_rank_iterations: int = 5,
         host_min_rank_pct: float | None = None,
-        ingest_stats: bool = True,
         parallel_appends: bool = True,
         # derive ALL near-dedup drop-sets from the single
         # valve_ckpt_funnel checkpoint instead of taking a second
@@ -436,7 +435,6 @@ class CurationIngest:
         self.host_min_rank_pct = host_min_rank_pct
         self.host_edges_path = os.path.join(base_dir, "host_edges")
         self.host_ranks_path = os.path.join(base_dir, "host_ranks")
-        self.ingest_stats = ingest_stats
         # run the independent per-batch store appends from concurrent
         # driver threads (r12 floor cut — see process_batch); False
         # keeps the sequential form for A/B and debugging
@@ -607,8 +605,6 @@ class CurationIngest:
         def _tap(df: DataFrame, stage: str) -> DataFrame:
             if self.plan_probe is not None:
                 self.plan_probe(stage, df)
-            if not self.ingest_stats:
-                return df
             ob = Observation()
             taps.append((stage, ob))
             return df.observe(ob, F.count(F.lit(1)).alias("n"))
@@ -1304,24 +1300,23 @@ class CurationIngest:
                 for s, fn in appends:
                     _timed_append(s, fn)
             _mark("store_appends_total")
-            if self.ingest_stats:
-                # the observability record (r11): every tap was populated
-                # by the curated write's job above (Observation.get is
-                # already resolved — no extra Spark action), and the row
-                # lands INSIDE the commit envelope (cleared on replay,
-                # sealed by the marker below) so redelivery leaves
-                # exactly one stats row per batch. Written DRIVER-SIDE
-                # with pyarrow (r12 floor cut): a
-                # createDataFrame([row]).write job measured 4-5 s of
-                # pure overhead (Python-RDD conversion + job scheduling)
-                # for one row — ~20% of the all-stores per-batch floor.
-                # session.local_frame is the general fix for the
-                # Python-RDD part; this write stays driver-side because
-                # a Spark write of even a local relation is still a job.
-                self._write_stats_row_driver_side(
-                    self._ingest_stats_row(taps), seg
-                )
-                _mark("stats_row_write")
+            # the observability record (r11): every tap was populated
+            # by the curated write's job above (Observation.get is
+            # already resolved — no extra Spark action), and the row
+            # lands INSIDE the commit envelope (cleared on replay,
+            # sealed by the marker below) so redelivery leaves
+            # exactly one stats row per batch. Written DRIVER-SIDE
+            # with pyarrow (r12 floor cut): a
+            # createDataFrame([row]).write job measured 4-5 s of
+            # pure overhead (Python-RDD conversion + job scheduling)
+            # for one row — ~20% of the all-stores per-batch floor.
+            # session.local_frame is the general fix for the
+            # Python-RDD part; this write stays driver-side because
+            # a Spark write of even a local relation is still a job.
+            self._write_stats_row_driver_side(
+                self._ingest_stats_row(taps), seg
+            )
+            _mark("stats_row_write")
             if batch_id is not None:
                 self._write_marker(seg)
         finally:

@@ -131,27 +131,6 @@ def test_signal_builders_match_driver_rows(spark, docs):
     assert qual[8]["quality_score"] == 0.0         # NULL text
 
 
-def test_quality_rep_kernels_agree(spark, docs):
-    """The arrow repetition kernel (per-doc mapInPandas, r15) and the
-    groupBy kernel yield IDENTICAL quality_signals rows — including
-    NULL text, empty text, and single-token docs (no bigrams: counts
-    coalesce to 0 on both paths)."""
-    import pytest as _pytest
-
-    extra = spark.createDataFrame(
-        [(100, None), (101, ""), (102, "one"), (103, "a b a b a b")],
-        "doc_id long, text string",
-    )
-    corpus = docs.select("doc_id", "text").unionByName(extra)
-    a = sorted(map(tuple, C.quality_signals(corpus).collect()))
-    b = sorted(
-        map(tuple, C.quality_signals(corpus, rep_kernel="arrow").collect())
-    )
-    assert a == b and len(a) == corpus.count()
-    with _pytest.raises(ValueError):
-        C.quality_signals(corpus, rep_kernel="nope")
-
-
 def test_domain_mixture_alpha_one_is_natural_proportions(spark):
     """alpha=1 makes every domain's keep rate exactly budget_frac: the
     temperature-free mixture is a uniform downsample."""

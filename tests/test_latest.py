@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-import pytest
 from pyspark.sql import functions as F
 
 from adsb_clickhouse_spark.operators.latest import (
@@ -23,44 +22,27 @@ def _df(spark, rows):
     )
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window"])
-def test_newest_wins_and_late_rows_harmless(spark, strategy):
+def test_newest_wins_and_late_rows_harmless(spark):
     rows = [
         ("a", NOW, NOW, 1),
         ("a", NOW - timedelta(seconds=30), NOW, 2),   # older
         ("a", NOW - timedelta(seconds=10), NOW + timedelta(seconds=5), 3),  # late arrival, older event time
         ("b", NOW - timedelta(seconds=5), NOW, 4),
     ]
-    out = latest_per_key(_df(spark, rows), strategy=strategy).collect()
+    out = latest_per_key(_df(spark, rows)).collect()
     got = {r["icao24"]: r["v"] for r in out}
     assert got == {"a": 1, "b": 4}
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window"])
-def test_tiebreak_pinned(spark, strategy):
+def test_tiebreak_pinned(spark):
     """Equal scrape_time: ClickHouse FINAL keeps an arbitrary (insert-order)
     row; we pin the tie deterministically on ingestion_time (SURVEY §4)."""
     rows = [
         ("a", NOW, NOW, 1),
         ("a", NOW, NOW + timedelta(seconds=1), 2),    # later ingestion wins
     ]
-    out = latest_per_key(_df(spark, rows), strategy=strategy).collect()
+    out = latest_per_key(_df(spark, rows)).collect()
     assert len(out) == 1 and out[0]["v"] == 2
-
-
-def test_agg_and_window_strategies_agree(spark):
-    import random
-
-    rng = random.Random(1)
-    rows = [
-        (f"k{rng.randrange(20)}", NOW - timedelta(seconds=rng.randrange(1000)),
-         NOW - timedelta(seconds=rng.randrange(1000)), i)
-        for i in range(500)
-    ]
-    df = _df(spark, rows)
-    a = {(r["icao24"], r["v"]) for r in latest_per_key(df, strategy="agg").collect()}
-    w = {(r["icao24"], r["v"]) for r in latest_per_key(df, strategy="window").collect()}
-    assert a == w
 
 
 def test_latest_view_freshness_window(spark):

@@ -1,4 +1,4 @@
-"""Property-based check: latest_per_key (both strategies) equals a
+"""Property-based check: latest_per_key equals a
 straightforward python argmax reference on arbitrary inputs."""
 
 from __future__ import annotations
@@ -52,14 +52,13 @@ def test_latest_per_key_matches_reference(spark_global, rows):
         "icao24 string, scrape_time timestamp, ingestion_time timestamp, v int",
     )
     best, ambiguous = _reference(rows)
-    for strategy in ("agg", "window"):
-        out = {r["icao24"]: r for r in latest_per_key(df, strategy=strategy).collect()}
-        assert set(out) == {f"k{k}" for k in best}
-        for k, (v, t, p) in best.items():
-            got = out[f"k{k}"]
-            assert got["scrape_time"] == BASE + timedelta(seconds=v)
-            if k not in ambiguous:
-                assert got["v"] == p
+    out = {r["icao24"]: r for r in latest_per_key(df).collect()}
+    assert set(out) == {f"k{k}" for k in best}
+    for k, (v, t, p) in best.items():
+        got = out[f"k{k}"]
+        assert got["scrape_time"] == BASE + timedelta(seconds=v)
+        if k not in ambiguous:
+            assert got["v"] == p
 
 
 # session fixture alias usable inside @given (function-scoped fixtures are

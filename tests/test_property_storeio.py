@@ -1,9 +1,11 @@
 """Differential property test: the three StoreIO implementations agree.
 
 The CAS port's whole claim is that callers proven against one
-implementation behave identically on the others — POSIX, the in-memory
-fake, and the conditional-put catalog must expose the SAME observable
-namespace semantics (results and error/no-error outcomes) for any
+implementation behave identically on the others — POSIX, the CAS port
+catalog-only (the in-memory fake: a scheme path over ``MemCASBackend``),
+and the CAS port in hybrid mode (catalog authority over a local payload
+plane, the split a real object-store deployment has) must expose the
+SAME observable namespace semantics (results and error/no-error outcomes) for any
 sequence of seam operations. Hypothesis drives random op sequences over
 a small path universe and compares all three step by step; any
 divergence is a caller-visible parity bug of exactly the kind the r13
@@ -29,7 +31,6 @@ from adsb_clickhouse_spark.plans.storeio import (
     CASStoreIO,
     LocalStoreIO,
     MemCASBackend,
-    MemStoreIO,
 )
 
 _NAMES = ["a", "b", "batch_id=b0", "_marker", "seg"]
@@ -85,17 +86,17 @@ def test_three_implementations_agree(ops):
         os.makedirs(local_root)
         impls = [
             (LocalStoreIO(), local_root),
-            (MemStoreIO(), "mem://r"),
             (CASStoreIO(MemCASBackend()), "cas-test://r"),
+            (CASStoreIO(MemCASBackend()), os.path.join(tmp, "hybrid")),
         ]
-        # the fakes need their root to exist like the local one does
-        impls[1][0].makedirs("mem://r")
-        impls[2][0].makedirs("cas-test://r")
+        # the CAS roots need to exist like the local one does
+        for io, root in impls[1:]:
+            io.makedirs(root)
         for step, op in enumerate(ops):
             results = [_apply(io, root, op) for io, root in impls]
             assert results[0] == results[1] == results[2], (
                 f"step {step} {op} of {ops}: local={results[0]} "
-                f"mem={results[1]} cas={results[2]}"
+                f"cas={results[1]} hybrid={results[2]}"
             )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

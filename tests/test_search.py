@@ -648,33 +648,3 @@ def test_shared_union_tfs_paths_agree(spark):
                 for r in retrieval_eval(docs, queries, k=5, tokenized=tok,
                                         tfs=tfs_all).collect()}
     assert e_plain == e_shared
-
-
-def test_phrase_from_positional_tfs_agrees(spark):
-    """r15 optimization contract (phrase tfs= fast path): exploding a
-    positional doc_term_freqs frame reproduces the token-stream rows
-    one-for-one, so phrase results must match the self-exploding form
-    exactly; a non-positional frame is rejected loudly."""
-    import pytest
-
-    from adsb_clickhouse_spark.operators.search import (
-        doc_term_freqs,
-        phrase_search,
-        tokenize_docs,
-    )
-
-    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    tok = tokenize_docs(docs).localCheckpoint(eager=False)
-    for ph in ("join hash", "sort merge join", "join"):
-        terms = sorted(set(ph.split()) | {"window", "table"})
-        tfs = doc_term_freqs(docs, terms=terms, tokenized=tok,
-                             with_positions=True)
-        a = {r["doc_id"]: r["n_matches"]
-             for r in phrase_search(docs, ph, k=20).collect()}
-        b = {r["doc_id"]: r["n_matches"]
-             for r in phrase_search(docs, ph, k=20, tfs=tfs).collect()}
-        assert a == b and a
-
-    flat = doc_term_freqs(docs, terms=["join"], tokenized=tok)
-    with pytest.raises(ValueError, match="positional"):
-        phrase_search(docs, "join", tfs=flat)

@@ -1,5 +1,6 @@
 """The commit-metadata seam (plans/storeio.py) tested against BOTH
-implementations: the POSIX default and the in-memory fake. The fake
+implementations: the POSIX default and the CAS port, whose catalog-only
+form over ``MemCASBackend`` is the in-memory fake. The fake
 runs the genstore primitives end-to-end — proving the callers depend
 only on the StoreIO contract (atomic publish, exclusive create, atomic
 rename), not on the POSIX filesystem behind it — and the non-local-URI
@@ -19,19 +20,10 @@ from adsb_clickhouse_spark.plans.storeio import (
     CASStoreIO,
     LocalStoreIO,
     MemCASBackend,
-    MemStoreIO,
     register_scheme,
     storeio_for,
     unregister_scheme,
 )
-
-
-@pytest.fixture()
-def mem():
-    io = MemStoreIO()
-    register_scheme("mem", io)
-    yield io
-    unregister_scheme("mem")
 
 
 @pytest.fixture()
@@ -45,14 +37,13 @@ def cas():
     unregister_scheme("cas-test")
 
 
-def _both(tmp_path, mem):
-    """Every implementation, every contract test: POSIX, the in-memory
-    fake, the CAS port in hybrid mode (catalog authority + local
+def _both(tmp_path):
+    """Every implementation, every contract test: POSIX, the CAS port
+    in hybrid mode (catalog authority + local
     payload plane under a plain path), and the CAS port catalog-only
     (scheme path — what a pure object-store namespace looks like)."""
     return [
         (LocalStoreIO(), str(tmp_path / "local")),
-        (mem, "mem://root"),
         (CASStoreIO(MemCASBackend()), str(tmp_path / "cas")),
         (CASStoreIO(MemCASBackend()), "cas-test://root"),
     ]
@@ -61,8 +52,8 @@ def _both(tmp_path, mem):
 # -- interface contract, both implementations ---------------------------
 
 
-def test_write_atomic_read_roundtrip(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_write_atomic_read_roundtrip(tmp_path):
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "ptr")
         io.write_atomic(p, "gen-1")
@@ -73,8 +64,8 @@ def test_write_atomic_read_roundtrip(tmp_path, mem):
         assert [e for e in io.listdir(root) if ".tmp." in e] == []
 
 
-def test_read_missing_raises_oserror(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_read_missing_raises_oserror(tmp_path):
+    for io, root in _both(tmp_path):
         with pytest.raises(OSError):
             io.read_text(os.path.join(root, "absent"))
         with pytest.raises(OSError):
@@ -85,8 +76,8 @@ def test_read_missing_raises_oserror(tmp_path, mem):
             io.unlink(os.path.join(root, "absent"))
 
 
-def test_create_exclusive_single_winner(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_create_exclusive_single_winner(tmp_path):
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "law")
         won, content = io.create_exclusive(p, "first")
@@ -97,10 +88,10 @@ def test_create_exclusive_single_winner(tmp_path, mem):
         assert [e for e in io.listdir(root) if ".tmp." in e] == []
 
 
-def test_create_exclusive_concurrent_exactly_one_winner(tmp_path, mem):
+def test_create_exclusive_concurrent_exactly_one_winner(tmp_path):
     """N threads race the exclusive create: exactly one wins and every
     loser reads the winner's content — the law-bootstrap/lock contract."""
-    for io, root in _both(tmp_path, mem):
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "race")
         results: list[tuple[bool, str]] = []
@@ -119,8 +110,8 @@ def test_create_exclusive_concurrent_exactly_one_winner(tmp_path, mem):
         assert io.read_text(p) == winners[0]
 
 
-def test_rename_publishes_whole_tree_and_refuses_existing(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_rename_publishes_whole_tree_and_refuses_existing(tmp_path):
+    for io, root in _both(tmp_path):
         staging = os.path.join(root, ".staging")
         io.makedirs(os.path.join(staging, "seg", "sub"))
         io.write_atomic(os.path.join(staging, "seg", "sub", "f"), "x")
@@ -135,8 +126,8 @@ def test_rename_publishes_whole_tree_and_refuses_existing(tmp_path, mem):
             io.rename(os.path.join(staging, "seg2"), dst)
 
 
-def test_listdir_isdir_rmtree_glob(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_listdir_isdir_rmtree_glob(tmp_path):
+    for io, root in _both(tmp_path):
         io.makedirs(os.path.join(root, "segments", "b0"))
         io.makedirs(os.path.join(root, "segments", "b1"))
         io.write_atomic(os.path.join(root, "segments", "_marker"), "")
@@ -156,11 +147,12 @@ def test_listdir_isdir_rmtree_glob(tmp_path, mem):
         io.rmtree(os.path.join(root, "segments", "never-there"))  # ignore_errors
 
 
-def test_stat_token_changes_on_rewrite(tmp_path, mem):
+def test_stat_token_changes_on_rewrite(tmp_path):
     """The cache-invalidation contract: same content or not, a rewrite
     yields a different token (the (mtime_ns, size) r12-advice fix needs
-    at least size-or-time movement; MemStoreIO uses a sequence)."""
-    for io, root in _both(tmp_path, mem):
+    at least size-or-time movement; the CAS port uses the backend
+version)."""
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "manifest")
         io.write_atomic(p, "a\n")
@@ -169,8 +161,8 @@ def test_stat_token_changes_on_rewrite(tmp_path, mem):
         assert io.stat_token(p) != t1
 
 
-def test_has_files_suffix(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_has_files_suffix(tmp_path):
+    for io, root in _both(tmp_path):
         io.makedirs(os.path.join(root, "seg", "deep"))
         assert not io.has_files(os.path.join(root, "seg"), ".parquet")
         io.write_atomic(os.path.join(root, "seg", "deep", "part-0.parquet"), "")
@@ -178,16 +170,13 @@ def test_has_files_suffix(tmp_path, mem):
         assert not io.has_files(os.path.join(root, "absent"), ".parquet")
 
 
-# -- genstore primitives through the fakes --------------------------------
-# (parametrized over the in-memory POSIX-shaped fake AND the CAS port:
-# the crash-discipline logic is pure StoreIO calls, and must hold on a
+# -- genstore primitives through the fake ---------------------------------
+# (the crash-discipline logic is pure StoreIO calls, and must hold on a
 # namespace whose only atomic primitive is a conditional put)
 
 
-@pytest.fixture(params=["mem", "cas"])
-def fake(request, mem, cas):
-    if request.param == "mem":
-        return mem, "mem://stores"
+@pytest.fixture(params=["cas"])
+def fake(cas):
     return cas, "cas-test://stores"
 
 
@@ -320,8 +309,8 @@ def test_curation_ingest_guards_remote_base_dir():
         CurationIngest("s3://bucket/curation")
 
 
-def test_registered_scheme_lifts_guard(mem):
-    assert storeio_for("mem://anything") is mem
+def test_registered_scheme_lifts_guard(cas):
+    assert storeio_for("cas-test://anything") is cas
 
 
 def test_create_exclusive_survives_concurrent_release(tmp_path):
@@ -349,23 +338,23 @@ def test_create_exclusive_survives_concurrent_release(tmp_path):
     assert real_read(p) == "contender"
 
 
-def test_mem_glob_star_does_not_cross_separators(mem):
-    mem.makedirs("mem://t/scrape_date=a/batch_id=b0")
-    mem.makedirs("mem://t/scrape_date=a/extra/batch_id=b0")
-    got = mem.glob("mem://t/scrape_date=*/batch_id=b0")
-    assert got == ["mem://t/scrape_date=a/batch_id=b0"]  # not the nested one
+def test_mem_glob_star_does_not_cross_separators(cas):
+    cas.makedirs("cas-test://t/scrape_date=a/batch_id=b0")
+    cas.makedirs("cas-test://t/scrape_date=a/extra/batch_id=b0")
+    got = cas.glob("cas-test://t/scrape_date=*/batch_id=b0")
+    assert got == ["cas-test://t/scrape_date=a/batch_id=b0"]  # not the nested one
 
 
-def test_mem_dir_meta_dies_with_rmtree_and_moves_with_rename(mem):
-    mem.makedirs("mem://t/gone")
-    mem.rmtree("mem://t/gone")
+def test_mem_dir_meta_dies_with_rmtree_and_moves_with_rename(cas):
+    cas.makedirs("cas-test://t/gone")
+    cas.rmtree("cas-test://t/gone")
     with pytest.raises(OSError):
-        mem.mtime("mem://t/gone")
-    mem.makedirs("mem://t/src/sub")
-    mem.rename("mem://t/src", "mem://t/dst")
+        cas.mtime("cas-test://t/gone")
+    cas.makedirs("cas-test://t/src/sub")
+    cas.rename("cas-test://t/src", "cas-test://t/dst")
     with pytest.raises(OSError):
-        mem.stat_token("mem://t/src")
-    assert mem.stat_token("mem://t/dst/sub") is not None
+        cas.stat_token("cas-test://t/src")
+    assert cas.stat_token("cas-test://t/dst/sub") is not None
 
 
 # -- the CAS port's own contract ------------------------------------------
@@ -602,10 +591,10 @@ def test_cas_hybrid_unions_catalog_and_physical(tmp_path):
     assert not os.path.isdir(os.path.join(root, "batch_id=b0"))
 
 
-def test_unlink_if_conditional_delete(tmp_path, mem):
+def test_unlink_if_conditional_delete(tmp_path):
     """The takeover primitive (r13 advice): removes the file only if
     its stat token still matches — a rewrite in between must survive."""
-    for io, root in _both(tmp_path, mem):
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "lock")
         io.write_atomic(p, "stale-holder")
@@ -623,8 +612,8 @@ def test_unlink_if_conditional_delete(tmp_path, mem):
         assert io.unlink_if(p, t2) is False
 
 
-def test_file_size(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_file_size(tmp_path):
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "f")
         io.write_atomic(p, "abcd")
@@ -633,11 +622,11 @@ def test_file_size(tmp_path, mem):
             io.file_size(os.path.join(root, "absent"))
 
 
-def test_write_under_missing_parent_raises(tmp_path, mem):
+def test_write_under_missing_parent_raises(tmp_path):
     """POSIX parity (r13 advice): LocalStoreIO's open() refuses a
     nonexistent parent; the fakes must too, or callers proven against
     them still fail on the real filesystem."""
-    for io, root in _both(tmp_path, mem):
+    for io, root in _both(tmp_path):
         missing = os.path.join(root, "never-made", "f")
         with pytest.raises(OSError):
             io.write_atomic(missing, "x")
@@ -645,16 +634,16 @@ def test_write_under_missing_parent_raises(tmp_path, mem):
             io.create_exclusive(missing, "x")
 
 
-def test_mem_file_rename_onto_dir_raises(mem):
+def test_mem_file_rename_onto_dir_raises(cas):
     """POSIX parity (r13 advice): os.rename(file, existing dir) raises
-    IsADirectoryError; the fake used to clobber the dir silently."""
-    mem.makedirs("mem://t")
-    mem.write_atomic("mem://t/f", "x")
-    mem.makedirs("mem://t/d")
+    IsADirectoryError; a fake must not clobber the dir silently."""
+    cas.makedirs("cas-test://t")
+    cas.write_atomic("cas-test://t/f", "x")
+    cas.makedirs("cas-test://t/d")
     with pytest.raises(OSError):
-        mem.rename("mem://t/f", "mem://t/d")
-    assert mem.isdir("mem://t/d")
-    assert mem.read_text("mem://t/f") == "x"
+        cas.rename("cas-test://t/f", "cas-test://t/d")
+    assert cas.isdir("cas-test://t/d")
+    assert cas.read_text("cas-test://t/f") == "x"
 
 
 def test_writer_lock_break_never_steals_fresh_lock(tmp_path):
@@ -678,8 +667,8 @@ def test_writer_lock_break_never_steals_fresh_lock(tmp_path):
     assert io.read_text(p) == "live-holder|bbbb"  # live holder survives
 
 
-def test_touch_refreshes_stat_token(tmp_path, mem):
-    for io, root in _both(tmp_path, mem):
+def test_touch_refreshes_stat_token(tmp_path):
+    for io, root in _both(tmp_path):
         io.makedirs(root)
         p = os.path.join(root, "lock")
         io.write_atomic(p, "x")

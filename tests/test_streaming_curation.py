@@ -1208,13 +1208,6 @@ def test_ingest_report_cli(spark, tmp_path, capsys):
     assert main(["ingest-report", str(tmp_path / "nothing")]) == 1
 
 
-def test_ingest_stats_off_writes_no_log(spark, tmp_path):
-    import os
-    ing = CurationIngest(str(tmp_path), run_id="r1", ingest_stats=False)
-    ing.process_batch(_docs(spark, [(0, _NEAR_A)]), batch_id=0)
-    assert not os.path.isdir(ing.ingest_log_path)
-
-
 def test_vector_index_embed_fallback_on_text_only_stream(spark, tmp_path):
     """vector_index=True + embed_dim on a TEXT-ONLY stream: survivors
     are embedded by the deterministic hashed-projection embedder and
