@@ -613,7 +613,7 @@ def curate_documents(
     qual = quality_signals(docs, text_col=text_col, id_col=id_col)
     if fuse_projective:
         # FUSED projective stages (r11, A/B-measured in
-        # tools/bench_curation_scale.py): scrub, langid, and the host
+        # tools/scale.py curation_scale): scrub, langid, and the host
         # attach are all pure per-row projections, so they compose
         # COLUMN-WISE on one corpus scan instead of doc_id self-joins —
         # Catalyst does not fuse projection⋈projection self-joins (the

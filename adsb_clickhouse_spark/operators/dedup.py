@@ -377,7 +377,7 @@ def ngram_jaccard_pairs_prefix(
     the join fan-out is smallest. A size-ratio filter (|B| ≥ t·|A|)
     prunes further before verification against the full index.
 
-    Crossover (measured, tools/bench_prefix_crossover.py): at bench
+    Crossover (measured, tools/scale.py prefix_crossover): at bench
     scale (sf0.1, ~27k distinct shingles, max frequency 25) the naive
     inverted-index join is still faster (~4.9 s vs ~7.4 s median) — the
     ranking windows' fixed cost exceeds the candidate savings on a corpus
@@ -459,7 +459,7 @@ def ngram_jaccard_pairs_prefix(
 # naive-vs-prefix decision cutoff: measured mean candidate fan-out per
 # index row is ~10.7 on the bench corpus (naive wins there, 2.8 s vs
 # 4.9 s at sf0.1) and ≥112 on every boilerplate-heavy synthetic from
-# tools/bench_prefix_crossover.py (where prefix wins by growing
+# the prefix_crossover scenario of tools/scale.py (prefix wins by growing
 # margins). 48 sits in the gap with ~4× margin on both sides.
 NAIVE_FANOUT_CUTOFF = 48.0
 

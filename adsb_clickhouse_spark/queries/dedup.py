@@ -403,7 +403,7 @@ def _duck_prefix_jaccard_sql(t: float = 0.5) -> str:
         "(AllPairs/PPJoin — docs index only the |S|-ceil(t|S|)+1 "
         "globally-rarest shingles, so hot template shingles never enter "
         "the candidate join) above it (fan-out >= 112 on every "
-        "boilerplate corpus in tools/bench_prefix_crossover.py). Both "
+        "boilerplate corpus of tools/scale.py prefix_crossover). Both "
         "paths are exact, so the oracle (spelled as the prefix plan) "
         "pins the output either way; the prefix machinery itself is "
         "additionally pinned Spark-vs-Spark by "

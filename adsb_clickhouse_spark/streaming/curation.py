@@ -453,7 +453,7 @@ class CurationIngest:
         self._vec_centroid_cache: dict = {}
         # optional plan probe: a callable(stage_name, DataFrame) invoked
         # at every funnel stage boundary of process_batch — the plan-
-        # fingerprint machinery hooks here (tools/bench_ingest_floor.py
+        # fingerprint machinery hooks here (bench.py
         # funnel_fingerprints) so the per-stage physical plans the last
         # three rounds' real bugs lived in (exponential analysis,
         # recacheByPath loss, AQE tap pruning) are regression-diffed

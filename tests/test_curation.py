@@ -749,7 +749,7 @@ def test_fuse_projective_outputs_identical_to_join_form(spark):
     langid + host attach) is a pure plan change: every funnel output —
     scored rows including redacted text and rank columns, kept set,
     packed rows — must be IDENTICAL to the pre-r11 doc_id self-join
-    idiom (also A/B'd at 300k docs in bench_curation_scale: equal
+    idiom (also A/B'd at 300k docs by the curation_scale scenario: equal
     counts, fused 19% faster)."""
     docs = _mk_host_docs(spark)
     a = C.curate_documents(

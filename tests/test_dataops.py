@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from adsb_clickhouse_spark.operators import dedup as D
 from adsb_clickhouse_spark.operators import multimodal as M
 from adsb_clickhouse_spark.operators import similarity as S
+from tools.scale import make_clustered_vectors, make_corpus, synth_corpus
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -51,8 +52,6 @@ def test_jaccard_auto_selects_and_agrees(spark):
     vs a boilerplate-heavy corpus (prefix), the sampled estimator stays
     on the right side, and all three operators (naive / prefix / auto)
     return identical pairs on the corpus where they disagree most."""
-    from tools.bench_prefix_crossover import synth_corpus
-
     plain = synth_corpus(spark, 300, 0)  # unique tails only
     # the fan-out statistic grows with corpus size in the boilerplate
     # regime (hot-shingle freq = n_docs): 300 docs sit below the
@@ -363,10 +362,8 @@ def test_ivf_lloyd_refined_recall_at_scale(spark):
     """The Lloyd-refined IVF path (iters>0 — not SQL-expressible, so the
     oracle gate runs iters=0): clustered vectors at a size that keeps
     the default pytest suite fast, recall@k vs exact brute force at
-    fixed nprobe. The full 1M-vector scale probe lives in
-    tools/bench_ivf_scale.py (README row) — advisor-requested split so
-    small machines can run `pytest tests/` without a multi-minute,
-    memory-heavy test."""
+    fixed nprobe. The 1M-vector figure is README's measured-scale row;
+    this size keeps `pytest tests/` runnable on small machines."""
     from pyspark.sql import functions as F
 
     from adsb_clickhouse_spark.operators.similarity import (
@@ -374,8 +371,6 @@ def test_ivf_lloyd_refined_recall_at_scale(spark):
         ivf_search,
         knn_bruteforce,
     )
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     n, dim, n_lists, k, nprobe = 100_000, 32, 64, 10, 8
     corpus = make_clustered_vectors(spark, n, dim, n_lists, seed=0).persist()
     corpus.count()
@@ -416,8 +411,6 @@ def test_ivfpq_full_probe_matches_flat_pq(spark):
         ivfpq_search,
         pq_search,
     )
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     corpus = make_clustered_vectors(spark, 2_000, 16, 8, seed=2).persist()
     corpus.count()
     q = corpus.filter(F.col("vec_id") < 3)
@@ -445,8 +438,6 @@ def test_ivfpq_narrow_probe_cluster_recall(spark):
     from pyspark.sql import functions as F
 
     from adsb_clickhouse_spark.operators.similarity import ivfpq_build, ivfpq_search
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     n_clusters = 8
     corpus = make_clustered_vectors(spark, 4_000, 16, n_clusters, seed=3).persist()
     corpus.count()
@@ -483,8 +474,6 @@ def test_ivfpq_rerank_full_budget_matches_bruteforce(spark):
         ivfpq_search,
         knn_bruteforce,
     )
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     corpus = make_clustered_vectors(spark, 1_000, 16, 4, seed=5).persist()
     corpus.count()
     q = corpus.filter(F.col("vec_id") < 2)
@@ -504,7 +493,7 @@ def test_ivfpq_rerank_full_budget_matches_bruteforce(spark):
         # not: this corpus is so tight that PQ collapses each cluster
         # to one code, ADC ties id-break, and high-id true neighbors
         # fall off the shortlist — the make_clustered_vectors noise
-        # docstring; bench_ivfpq_stored measures the realistic regime.)
+        # docstring; README's stored IVF-ADC row is the realistic regime.)
         nr = ivfpq_search(
             indexed, coarse, pq_cents, q, k=4, nprobe=1, rerank=300
         ).collect()
@@ -532,8 +521,6 @@ def test_ivfpq_stored_probe_matches_and_prunes(spark, tmp_path):
         ivfpq_probe_stored,
         ivfpq_search,
     )
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     corpus = make_clustered_vectors(spark, 2_000, 16, 8, seed=4).persist()
     corpus.count()
     q = corpus.filter(F.col("vec_id") < 2)
@@ -569,8 +556,6 @@ def test_pq_adc_recall_lloyd_refined(spark):
     from pyspark.sql import functions as F
 
     from adsb_clickhouse_spark.operators.similarity import pq_build, pq_search
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     n, dim, m, ksub, k, n_clusters = 20_000, 32, 4, 16, 10, 32
     corpus = make_clustered_vectors(spark, n, dim, n_clusters, seed=1).persist()
     corpus.count()
@@ -1053,10 +1038,6 @@ def test_dedup_audit_sampled_recall_and_precision(spark):
     exact Jaccard on the sample, and reports precision 1.0 (candidates
     are exact-verified). On the planted-dup synthetic corpus the exact
     pairs at J>=0.5 within the sample must all be found or counted."""
-    import sys
-    sys.path.insert(0, "tools")
-    from bench_dedup_scale import make_corpus
-
     corpus = make_corpus(spark, 4000)
     row = D.dedup_audit(corpus, threshold=0.5, sample_mod=4).collect()[0]
     assert 0 < row["sample_docs"] < 4000
@@ -1383,8 +1364,6 @@ def test_pq_probe_single_broadcast_plan(spark):
     from pyspark.sql import functions as F
 
     from adsb_clickhouse_spark.operators.similarity import pq_build, pq_search
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     corpus = make_clustered_vectors(spark, 500, 16, 4, seed=3)
     q = corpus.filter(F.col("vec_id") < 3)
     codes, pq_cents = pq_build(corpus, m=4, ksub=8, iters=0)
@@ -1407,8 +1386,6 @@ def test_ivfpq_fused_build_matches_composed(spark):
         ivf_build,
         pq_build,
     )
-    from tools.bench_ivf_scale import make_clustered_vectors
-
     corpus = make_clustered_vectors(spark, 600, 16, 4, seed=5).persist()
     corpus.count()
     try:

@@ -17,6 +17,9 @@ import os
 import duckdb
 import pytest
 
+import __spark_entry__ as entry_mod
+from tools.check_correctness import value_hash
+
 EDGE_DOCS = [
     (0, "", "en", "edge", 0),
     (1, " ", "en", "edge", 1),
@@ -78,12 +81,6 @@ def edge_sf_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", TEXT_QUERIES)
 def test_edge_corpus_oracle_parity(spark, edge_sf_dir, name):
-    import sys
-
-    sys.path.insert(0, ".")
-    import __spark_entry__ as entry_mod
-    from tools.check_correctness import value_hash
-
     sdf = entry_mod.queries()[name](spark, edge_sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -148,12 +145,6 @@ def edge_emb_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", SIM_QUERIES)
 def test_edge_embeddings_oracle_parity(spark, edge_emb_dir, name):
-    import sys
-
-    sys.path.insert(0, ".")
-    import __spark_entry__ as entry_mod
-    from tools.check_correctness import value_hash
-
     sdf = entry_mod.queries()[name](spark, edge_emb_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -209,12 +200,6 @@ def fuzz_sf_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", TEXT_QUERIES)
 def test_fuzz_corpus_oracle_parity(spark, fuzz_sf_dir, name):
-    import sys
-
-    sys.path.insert(0, ".")
-    import __spark_entry__ as entry_mod
-    from tools.check_correctness import value_hash
-
     sdf = entry_mod.queries()[name](spark, fuzz_sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -256,12 +241,6 @@ def test_edge_retrieval_oracle_parity(spark, edge_retrieval_dir):
     of nothing must be empty on BOTH engines, not an error), the knn
     leg sees zero-norm vectors (excluded by contract), and the hybrid
     fusion must survive one leg being empty."""
-    import sys
-
-    sys.path.insert(0, ".")
-    import __spark_entry__ as entry_mod
-    from tools.check_correctness import value_hash
-
     name = "search_retrieval"
     sdf = entry_mod.queries()[name](spark, edge_retrieval_dir)
     scols = sdf.columns

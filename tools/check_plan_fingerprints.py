@@ -14,6 +14,16 @@ plan (ResultQueryStage / AQEShuffleRead reflecting the runtime
 re-plan); a built-but-unexecuted plan shows only the initial plan and
 would mismatch every row.
 
+The committed baseline reproduces only on the box that wrote it. On a
+4-vCPU box, a fresh build of the r17 snapshot commit itself differs
+from its own ``PLANS_r17.json`` in 48 of 50 registry rows, with
+``SPARK_GRAFT_CPUS=4`` and with it unset alike; for
+``q01_pricing_summary`` the operator tree matches line for line, so
+what moves is in the hashed detail text, which is not committed. On
+any other box the plan gate is therefore a same-box parent-vs-change
+comparison: the ``fresh`` hashes this tool prints, run at both commits, or
+``bench.py --plans DIR`` dumps of both compared with ``diff -r``.
+
 Usage: python tools/check_plan_fingerprints.py [sf_dir] [--selftest]
 Default sf_dir: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1 (must match
 the directory the committed baseline was generated against — plan
@@ -80,7 +90,7 @@ def main() -> int:
         # the funnel detector fires on a real degradation. Runs
         # in-process against itself, so it needs no committed funnel
         # baseline.
-        from tools.bench_ingest_floor import funnel_fingerprints
+        from bench import funnel_fingerprints
 
         clean = funnel_fingerprints(spark)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -131,7 +141,7 @@ def main() -> int:
     # way the bench does (fixed-shape all-stores ingest, probe hook)
     if any(k.startswith("funnel:") for k in committed) or selftest:
         try:
-            from tools.bench_ingest_floor import funnel_fingerprints
+            from bench import funnel_fingerprints
 
             fresh.update(funnel_fingerprints(spark))
         except Exception as exc:
@@ -147,6 +157,7 @@ def main() -> int:
         "changed": sorted(k for k in changes if not k.startswith(("+", "-"))),
         "added": sorted(k[1:] for k in changes if k.startswith("+")),
         "removed": sorted(k[1:] for k in changes if k.startswith("-")),
+        "fresh": {k: v["hash"] for k, v in sorted(fresh.items())},
     }
     print(json.dumps(out))
     for name, body in changes.items():
