@@ -138,7 +138,9 @@ class AdsbEngine:
     ) -> DataFrame:
         """Flight-history time-range scan (§3.3): the $__timeFilter range
         hits the scrape_date partition column first → partition pruning,
-        then parquet min/max skipping on scrape_time within partitions."""
+        then parquet min/max skipping on scrape_time within partitions.
+        Rows come ordered by time; with ``stride``, every stride-th row
+        in (time, icao24) order (operators.latest.stride_sample)."""
         pipe = self.pipelines[source]
         hist = tables.read_history(self.spark, pipe.history_path, schema=clean_schema(pipe.cfg))
         out = hist.filter(
@@ -149,12 +151,12 @@ class AdsbEngine:
         )
         if moving_only:
             out = out.filter(F.col("ground_speed") > 0)
-        out = out.select(
-            F.col("scrape_time").alias("time"), "icao24", "lat", "lon", "alt_baro"
-        ).orderBy("time")
+        out = out.select(F.col("scrape_time").alias("time"), "icao24", "lat", "lon", "alt_baro")
         if stride:
-            out = stride_sample(out, stride, ["time", "icao24"])
-        return out
+            # already ordered by (time, icao24): a sort before it would
+            # turn the stride's size probe into a top-K
+            return stride_sample(out, stride, ["time", "icao24"])
+        return out.orderBy("time")
 
     # -- system/metadata scans (SURVEY §2.1 S7) ----------------------------
 

@@ -18,10 +18,15 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import local_frame, size_gated
+
+# stride_sample sorts and strides inputs up to this many rows on the driver
+STRIDE_DRIVER_MAX_ROWS = 100_000
 
 
 def latest_per_key(
@@ -77,8 +82,21 @@ def stride_sample(df: DataFrame, n: int, order_by: str | list[str]) -> DataFrame
     """P5: keep every n-th row — subquery over rowNumberInAllBlocks() with
     ``row_idx % n = 0`` (dashboards/examples/Current_Positions_Regional.json:321).
 
-    Exact global numbering WITHOUT a single-partition window (the naive
-    ``Window.orderBy(cols)`` funnels the whole table through one task):
+    Row ``row_idx`` is the row's position in ascending ``order_by``
+    order (nulls first, as Spark sorts), counted from 0. Both paths
+    return the kept rows in that order.
+
+    A :func:`~adsb_clickhouse_spark.session.size_gated` probe picks the
+    path. Up to ``STRIDE_DRIVER_MAX_ROWS`` rows, the probe's Arrow table
+    is sorted and strided on the driver and returned as a
+    ``LocalRelation``: the probe is the only Spark job, where the
+    distributed path runs several (a dashboard trajectory went from 6
+    jobs to 1). Above it, the probe is one extra job and the
+    distributed path below runs unchanged.
+
+    The distributed path numbers rows exactly WITHOUT a single-partition
+    window (the naive ``Window.orderBy(cols)`` funnels the whole table
+    through one task):
 
     1. ``repartitionByRange(cols) + sortWithinPartitions(cols)`` — one
        shuffle, globally ordered partitions (partition i ≤ partition i+1).
@@ -105,8 +123,38 @@ def stride_sample(df: DataFrame, n: int, order_by: str | list[str]) -> DataFrame
     cluster use ``persist(DISK_ONLY)``/reliable checkpoint instead of
     memory, and prefer ``df.sample(1/n)`` (no shuffle, no barrier) when
     the exact stride is not required.
+
+    The driver path sorts with Arrow, so ``order_by`` columns must be of
+    types Arrow can sort (numbers, strings, booleans, dates, timestamps).
     """
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
+    return size_gated(
+        df,
+        STRIDE_DRIVER_MAX_ROWS,
+        lambda t: local_frame(df.sparkSession, _stride_table(t, n, cols), df.schema),
+        lambda d: _stride_distributed(d, n, cols),
+    )
+
+
+def _stride_table(table: pa.Table, n: int, cols: list[str]) -> pa.Table:
+    """Every n-th row of ``table`` in Spark's ascending order on ``cols``:
+    nulls first, and NaN after every other number (Arrow alone would put
+    NaN with the nulls)."""
+    keys = []
+    for c in cols:
+        if pa.types.is_floating(table.schema.field(c).type):
+            keys.append(pc.is_nan(table[c]))
+        keys.append(table[c])
+    names = [str(i) for i in range(len(keys))]
+    order = pc.sort_indices(
+        pa.table(keys, names=names),
+        sort_keys=[(k, "ascending") for k in names],
+        null_placement="at_start",
+    )
+    return table.take(order[::n])
+
+
+def _stride_distributed(df: DataFrame, n: int, cols: list[str]) -> DataFrame:
     local_mask = (1 << 33) - 1
     # Explicit partition count: a user-numbered repartition is an
     # AQE-preserved contract (no post-shuffle coalescing), so partition

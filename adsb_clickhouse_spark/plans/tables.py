@@ -21,7 +21,11 @@ Reproduces the reference's storage engines with Spark-native layout:
   TTL 1 HOUR` (schema/schema-local.sql:370-372) → keyed upsert: merge the
   incoming batch with existing state via `latest_per_key`, atomically
   swap. State is bounded by live-key count (~12k aircraft), so this stays
-  a small single-digit-MB table regardless of ingest volume. Every
+  a small single-digit-MB table regardless of ingest volume, and it is
+  kept as ONE partition: each upsert merges in one task (no shuffle) and
+  writes one file, and each read is one partition, so a dashboard's
+  ``ORDER BY`` over it is a local sort in one job, not a range exchange
+  over three. Every
   snapshot is `latest_per_key` output, so it holds exactly ONE row per
   key: the ``*_latest`` views over it are a recency filter alone — no
   second read-time dedup (the ``FINAL`` a ReplacingMergeTree needs
@@ -394,6 +398,11 @@ def upsert_state(
     per `key`, so readers of the ``*_latest`` view only filter it by
     recency (streaming/pipeline.py ``IngestPipeline.latest``).
 
+    State is bounded by the live-key count, so the stored snapshot and
+    the batch are merged as one partition: ``coalesce(1)`` before
+    `latest_per_key` lets the key aggregation run in one task with no
+    shuffle, and the snapshot is one parquet file (module docstring).
+
     The current snapshot is read with ``batch.schema`` (no inference
     job). On schema drift, a batch column the stored snapshot lacks reads
     as null for the stored rows, and a stored column the batch lacks is
@@ -406,14 +415,13 @@ def upsert_state(
         candidates = batch
         if cur is not None:
             candidates = spark.read.schema(batch.schema).parquet(cur).unionByName(batch)
-        merged = latest_per_key(candidates, key=key, version=version)
+        merged = latest_per_key(candidates.coalesce(1), key=key, version=version)
         if ttl is not None:
             now_col = F.lit(now).cast("timestamp") if now else F.current_timestamp()
             merged = merged.filter(F.col(version) > now_col - F.expr(f"INTERVAL {ttl}"))
         new_version = "v_" + uuid.uuid4().hex
         snap = os.path.join(path, new_version)
-        # state is bounded by live-key count — coalesce to avoid file sprawl
-        merged.coalesce(4).write.mode("overwrite").parquet(snap)
+        merged.write.mode("overwrite").parquet(snap)
         _commit_pointer(path, new_version)
         _gc_snapshots(path, keep=new_version, grace_s=gc_grace_s)
 
@@ -422,12 +430,16 @@ def read_state(
     spark: SparkSession, path: str, *, schema: T.StructType | None = None
 ) -> DataFrame:
     """Resolve the current snapshot pointer and scan it — one row per key
-    (upsert_state). Falls back to reading `path` directly for
-    pre-versioned layouts (and to surface the standard missing-table
-    error when nothing was ever committed). ``schema`` is the stored
-    schema, which spares the inference job; ``None`` infers it."""
+    (upsert_state) — as ONE partition. The state is bounded by the
+    live-key count, and a frame the planner knows is one partition
+    needs no exchange for a sort or a key aggregation: an ``orderBy``
+    over it is a local sort, one job per collect. Falls back to reading
+    `path` directly for pre-versioned layouts (and to surface the
+    standard missing-table error when nothing was ever committed).
+    ``schema`` is the stored schema, which spares the inference job;
+    ``None`` infers it."""
     snap = _current_snapshot_dir(path)
-    return _reader(spark, schema).parquet(snap if snap else path)
+    return _reader(spark, schema).parquet(snap if snap else path).coalesce(1)
 
 
 def expire_history(

@@ -20,14 +20,17 @@ the Arrow path cost 0.041 CPU-s and 0.040 s and ran none.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from datetime import timezone
+from typing import TypeVar
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
+
+R = TypeVar("R")
 
 
 def default_parallelism() -> int:
@@ -92,7 +95,7 @@ def get_spark(app_name: str = "adsb_clickhouse_spark", *, shuffle_partitions: in
 
 
 def local_frame(
-    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+    spark: SparkSession, rows: Iterable[Sequence] | pa.Table, schema: str | T.StructType
 ) -> DataFrame:
     """A DataFrame over driver-side ``rows``, as an Arrow ``LocalRelation``.
 
@@ -102,8 +105,14 @@ def local_frame(
     or a ``None`` in a non-nullable field still raises. Naive datetimes in
     timestamp fields are read as local time, as ``createDataFrame`` reads
     them (the Arrow path alone would read them in the session time zone).
+
+    ``rows`` may also be a ``pyarrow.Table`` already in ``schema``'s Arrow
+    form, such as the ``toArrow()`` of a frame with that schema; it is
+    passed through unverified.
     """
     struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, struct)
     verify = _make_type_verifier(struct)
     rows = list(rows)
     for row in rows:
@@ -116,3 +125,30 @@ def local_frame(
             values = [None if v is None else v.astimezone(timezone.utc) for v in values]
         arrays.append(pa.array(values, type=arrow_field.type))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), struct)
+
+
+def size_gated(
+    df: DataFrame,
+    threshold: int,
+    driver_fn: Callable[[pa.Table], R],
+    dist_fn: Callable[[DataFrame], R],
+) -> R:
+    """``driver_fn`` over ``df``'s rows if it has at most ``threshold`` of
+    them, else ``dist_fn(df)``.
+
+    One probe decides: ``df.limit(threshold + 1)`` collected as Arrow.
+    That is one Spark job (a local limit per partition and one small
+    exchange), where ``limit().collect()`` scans partitions in rounds
+    and may run several. At or under the threshold the probe already
+    holds every row, so ``driver_fn`` gets them as a ``pyarrow.Table``
+    with no second read; a driver form that returns a DataFrame builds
+    it with :func:`local_frame`. Above the threshold the probe is an
+    extra job over at most ``threshold + 1`` rows, its rows are
+    dropped, and ``dist_fn`` reads ``df`` again, so an expensive
+    ``df`` should be materialised first.
+    """
+    probe = df.limit(threshold + 1).toArrow()
+    if probe.num_rows <= threshold:
+        return driver_fn(probe)
+    del probe
+    return dist_fn(df)

@@ -142,7 +142,9 @@ class IngestPipeline:
     def process_batch(self, raw: DataFrame, batch_id: int | None = None) -> None:
         ingestion = F.lit(self.now).cast("timestamp") if self.now else F.current_timestamp()
         clean = cleanse(raw, self.cfg, ingestion_time=ingestion)
-        # multiple sinks consume the cleansed batch — materialize it once
+        # multiple sinks consume the cleansed batch — materialize it once;
+        # with now=None this also gives all three sinks the same
+        # current_timestamp() ingestion_time
         clean.persist()
         try:
             # The three MVs are mutually independent — different target

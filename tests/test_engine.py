@@ -80,6 +80,35 @@ def test_trajectory_time_range_and_stride(engine):
         stride=4,
     ).collect()
     assert len(sampled) == (len(full) + 3) // 4
+    keys = [(r["time"], r["icao24"]) for r in sampled]
+    assert keys == sorted(keys)
+    assert keys == sorted((r["time"], r["icao24"]) for r in full)[::4]
+
+
+def test_current_state_is_one_partition(spark, tmp_base, spark_jobs):
+    """Current state is kept as one partition: each snapshot is one
+    file, and the dashboard's sorted panels over it plan no exchange
+    and collect in one Spark job."""
+    import os
+
+    eng = AdsbEngine(spark, tmp_base, now=NOW)
+    pipe = eng.pipelines["local"]
+    for i in range(2):
+        pipe.process_batch(
+            raw_batch(spark, SOURCES["local"], n_aircraft=15, n_scrapes=2, now=NOW - timedelta(seconds=5 * (1 - i))),
+            batch_id=i,
+        )
+    for path in (pipe.state_path, pipe.combined_path):
+        snap = os.path.join(path, open(os.path.join(path, "_CURRENT")).read().strip())
+        assert len([f for f in os.listdir(snap) if f.endswith(".parquet")]) == 1, snap
+    for name, df in [
+        ("current_positions", eng.current_positions("local", moving_only=False)),
+        ("nearest_aircraft", eng.nearest_aircraft(source="local")),
+    ]:
+        rows = []
+        assert spark_jobs(f"one_partition_{name}", lambda: rows.extend(df.collect())) == 1, name
+        assert len(rows) > 0, name
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString(), name
 
 
 def test_maintenance_respects_per_source_ttl(engine, spark):

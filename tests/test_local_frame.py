@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import ast
 import pathlib
-import time
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -49,17 +48,6 @@ CASES = {
 }
 
 
-@pytest.fixture()
-def non_utc_tz(monkeypatch):
-    """Run with a process time zone that is not UTC: createDataFrame reads
-    naive datetimes as local time, and so must local_frame."""
-    monkeypatch.setenv("TZ", "Europe/Berlin")
-    time.tzset()
-    yield
-    monkeypatch.undo()
-    time.tzset()
-
-
 def _assert_same(spark, rows, schema):
     got = local_frame(spark, rows, schema)
     want = spark.createDataFrame(rows, schema)
@@ -88,24 +76,14 @@ def test_verification_still_raises(spark):
         local_frame(spark, [("not a long",)], "a long")
 
 
-def _jobs(spark, group, action):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_local_relation_runs_no_job(spark):
+def test_local_relation_runs_no_job(spark, spark_jobs):
     schema, rows = CASES["scalars"]
     df = local_frame(spark, rows, schema)
     assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
-    assert _jobs(spark, "local_frame_collect", df.collect) == 0
+    assert spark_jobs("local_frame_collect", df.collect) == 0
     # the probe sees jobs: the list path runs one for the same collect
     listed = spark.createDataFrame(rows, schema)
-    assert _jobs(spark, "create_data_frame_collect", listed.collect) >= 1
+    assert spark_jobs("create_data_frame_collect", listed.collect) >= 1
 
 
 def _constructions_outside_local_frame(path: pathlib.Path) -> list[str]:

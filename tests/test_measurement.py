@@ -41,3 +41,5 @@ def test_scale_runner_prefix_crossover(session, capsys):
     assert line["n"] == 40 and line["wall_sec"] > 0
     assert line["checks"] == {"pairs_match": True}
     assert [lv["boiler_tokens"] for lv in line["levels"]] == [0, 8, 16, 32]
+    # the planted near-duplicates (docs 1, 11, 21, 31) are found at every level
+    assert all(lv["naive_pairs"] >= 1 for lv in line["levels"])

@@ -61,14 +61,31 @@ def test_substring_dedup_coverage_is_window_free(spark):
     assert "Window" not in plan and "EvalPython" not in plan
 
 
-def test_stride_sample_has_no_single_partition_window(spark):
+def test_stride_sample_has_no_single_partition_window(spark, monkeypatch):
     """The exact-stride global numbering must not funnel the table
     through one task (r1's scale-killer). The two-pass implementation
     has NO window operator at all — ordering flows through a parallel
-    range-partitioned exchange."""
-    plan = _plan(spark, "adsb_stride_sample")
-    assert "Window" not in plan
-    assert "rangepartitioning" in plan
+    range-partitioned exchange, in the plan of the numbered layout that
+    is checkpointed. At sf0.001 the table would take the driver path,
+    so the threshold is pinned to 0."""
+    from adsb_clickhouse_spark.operators import latest
+
+    monkeypatch.setattr(latest, "STRIDE_DRIVER_MAX_ROWS", 0)
+    events = Q.load_table(spark, SF, "events")
+    numbered = []
+    checkpoint = type(events).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        numbered.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(events), "localCheckpoint", capture)
+    out = latest.stride_sample(events, 4, "event_id")
+    (layout,) = numbered
+    n_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert "rangepartitioning(event_id#" in layout and f"ASC NULLS FIRST, {n_parts})" in layout
+    assert "Window" not in layout
+    assert "Window" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_latest_per_key_uses_partial_aggregation(spark):

@@ -44,10 +44,12 @@ import os
 import re
 import sys
 
-# import the package from THIS repo regardless of the caller's cwd
-# (r12 advice: sys.path.insert(0, ".") made the import cwd-dependent)
+# import the package from THIS repo regardless of the caller's cwd: the
+# driver through sys.path, Spark's Python workers (the Python-UDF rows)
+# through PYTHONPATH, which the JVM hands them once the session starts
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [_REPO, os.environ.get("PYTHONPATH")]))
 
 
 def main() -> int:

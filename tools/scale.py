@@ -7,11 +7,13 @@ wall clock around ``run``, and the one JSON line it prints. A result
 may carry a ``checks`` dict of booleans; the exit status is 0 only if
 all of them hold.
 
-Usage, from the repo root: python tools/scale.py <scenario> [n] [flag ...]
+Usage, from any directory: python tools/scale.py <scenario> [n] [flag ...]
 
 - ``prefix_crossover`` (n docs, default 2000): naive-vs-prefix-filter
   Jaccard dedup on corpora with a growing boilerplate share; backs
-  ``operators/dedup.py::NAIVE_FANOUT_CUTOFF``. Checks pair parity.
+  ``operators/dedup.py::NAIVE_FANOUT_CUTOFF``. Every 10th doc is a
+  near-duplicate of its neighbour, so each level has pairs to find;
+  checks that both operators find the same ones.
 - ``curation_scale`` (n docs, default 1M): the composed
   ``curate_documents`` funnel on the planted-duplicate corpus. Flags
   ``--full``, ``--gates``, ``--media``, ``--graph`` turn on optional
@@ -120,20 +122,24 @@ def synth_corpus(spark, n_docs: int, boiler_tokens: int, unique_tokens: int = 60
     Deterministic (seeded by doc id), built with Spark-side functions."""
     from pyspark.sql import functions as F
 
+    return spark.range(n_docs).select(
+        F.col("id").alias("doc_id"),
+        _synth_text(F.col("id"), boiler_tokens, unique_tokens).alias("text"),
+    )
+
+
+def _synth_text(doc_id, boiler_tokens: int, unique_tokens: int = 60):
+    """``synth_corpus``'s text for ``doc_id``, as a Column."""
+    from pyspark.sql import functions as F
+
     boiler = " ".join(f"boiler{i}" for i in range(boiler_tokens))
-    return (
-        spark.range(n_docs)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                F.lit(boiler),
-                *[
-                    F.concat(F.lit(f"u{j}_"), F.substring(F.md5(F.concat_ws("_", F.col("id"), F.lit(j))), 1, 8))
-                    for j in range(unique_tokens)
-                ],
-            ).alias("text"),
-        )
+    return F.concat_ws(
+        " ",
+        F.lit(boiler),
+        *[
+            F.concat(F.lit(f"u{j}_"), F.substring(F.md5(F.concat_ws("_", doc_id, F.lit(j))), 1, 8))
+            for j in range(unique_tokens)
+        ],
     )
 
 
@@ -149,7 +155,29 @@ _BOILER_LEVELS = (0, 8, 16, 32)
 
 
 def _crossover_inputs(spark, n, flags):
-    return {b: synth_corpus(spark, n, b) for b in _BOILER_LEVELS}
+    return {b: _near_dup_corpus(spark, n, b) for b in _BOILER_LEVELS}
+
+
+def _near_dup_corpus(spark, n: int, boiler_tokens: int):
+    """``synth_corpus`` with planted pairs: every doc with id % 10 == 1
+    copies doc id-1's text except the last token, its own. With 3-word
+    shingles the pair shares all but 3 of ~58 tail shingles (Jaccard
+    ~0.9 at every boilerplate level), while unplanted pairs share only
+    the template (Jaccard < 0.25), so the pairs found at t=0.5 are
+    exactly the planted ones."""
+    from pyspark.sql import functions as F
+
+    doc_id = F.col("id")
+    own = _synth_text(doc_id, boiler_tokens)
+    copied = F.concat_ws(
+        " ",
+        F.regexp_replace(_synth_text(doc_id - 1, boiler_tokens), r" \S+$", ""),
+        F.substring_index(own, " ", -1),
+    )
+    return spark.range(n).select(
+        doc_id.alias("doc_id"),
+        F.when(doc_id % 10 == 1, copied).otherwise(own).alias("text"),
+    )
 
 
 def _crossover_run(spark, n, inputs, flags):
@@ -467,7 +495,10 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    # the driver imports the package and bench.py from the repo root;
-    # Spark's Python workers import the package from the cwd
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    # the driver imports the package and bench.py from the repo root, and
+    # Spark's Python workers find it through PYTHONPATH, set before the
+    # JVM that starts them exists
+    _repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, _repo)
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [_repo, os.environ.get("PYTHONPATH")]))
     raise SystemExit(main())
