@@ -372,6 +372,15 @@ class LocalStoreIO(StoreIO):
         shutil.rmtree(path, ignore_errors=True)
 
     def rename(self, src: str, dst: str) -> None:
+        # POSIX rename silently replaces an EMPTY destination directory;
+        # the contract (and the CAS port) refuses any existing dst for
+        # a directory, so a publish never lands over a stray dir
+        if (
+            os.path.isdir(src)
+            and os.path.lexists(dst)
+            and not os.path.samefile(src, dst)
+        ):
+            raise FileExistsError(f"rename target exists: {dst}")
         os.rename(src, dst)
 
     def mtime(self, path: str) -> float:
