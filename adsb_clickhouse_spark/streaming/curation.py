@@ -45,7 +45,7 @@ Store lifecycle (the at-scale half):
   Dropped docs' exact fingerprints stay in the store on purpose —
   byte-identical copies of a pruned near-dup must remain suppressed.
 
-With ``media_dedup=True`` (r9) a binary payload column becomes a
+With ``media_dedup=True`` a binary payload column becomes a
 curation citizen: its md5 — 'm|'-prefixed into the SAME fingerprint
 store — drives exact media dedup within and across batches, the
 payload rides along into the curated table, and ``compact_curated``
@@ -53,14 +53,14 @@ adds perceptual-hash near-dup edges to the component graph, so a
 perturbed copy of an already-kept image is collapsed on the same
 lambda split as text (exact = per batch, near = periodic compaction).
 
-With ``vector_index=True`` (r9) each batch's survivors' embeddings
+With ``vector_index=True`` each batch's survivors' embeddings
 become a name-keyed segment of a stored IVF vector index
 (operators/vecindex.py) under ``base_dir/vector_index`` — curated
 docs are kNN-searchable as they land, with the same generational
 append/compact/GC lifecycle as the text index (compaction re-learns
 the coarse quantizer from the accumulated corpus).
 
-With ``media_near_dedup=True`` (r10) perceptual near-copies fall AT
+With ``media_near_dedup=True`` perceptual near-copies fall AT
 INGEST instead of waiting for compaction: each batch's kept media
 contribute (bkey = band·2^width + band-value, phash) rows to a stored
 band index (``phash_bands/``, batch-keyed, replay-overwritten); a later
@@ -76,7 +76,7 @@ hot-band valve as one bounded aggregate at fold time. The periodic
 connected-components pass over the accumulated corpus; the band index
 is the bounded fast path for "new copy of already-kept media".
 
-With ``text_near_dedup=True`` (r10) the same band-store pattern covers
+With ``text_near_dedup=True`` the same band-store pattern covers
 TEXT: within a batch, exact-Jaccard-verified MinHash-LSH pairs collapse
 to the smallest id; across batches, kept docs' (bkey = md5_long(band ‖
 band_key), signature) rows accrete into ``text_bands/`` and later
@@ -88,7 +88,7 @@ exact-Jaccard authority over the accumulated corpus;
 ``compact_text_bands`` folds the band segments into a bkey-bucketed
 table (also under CLI ``--compact-bands``).
 
-With ``host_col``/``host_links_col`` (r10) the domain-reputation prior
+With ``host_col``/``host_links_col`` the domain-reputation prior
 becomes a streaming dimension: each batch's host link edges accrete
 into ``base_dir/host_edges`` (batch-keyed, replay-overwritten), the
 periodic ``recompute_host_ranks`` maintain job folds them into a
@@ -108,11 +108,11 @@ segment append (a data-bearing init would double-count its batch if
 the init landed but the commit marker didn't); ``compact_text_index``
 is the matching maintenance job, same transitive-manifest discipline.
 
-Observability (r11): every committed batch writes ONE stats row to
+Observability: every committed batch writes ONE stats row to
 ``ingest_log/`` — rows in, drops per gate (policy, host, exact
 text/media, store dup, near-dup text/media split batch/store),
-admitted, store segment tallies — from ``Observation`` taps that
-piggyback the curated write's own job (zero extra passes; a tap
+admitted, store segment tallies — from ``Observation`` taps that ride
+the jobs that already execute the funnel (zero extra passes; a tap
 re-referenced by a downstream self-join fires exactly once). The row
 lives inside the batch's commit envelope (cleared on replay, sealed by
 the marker), so redelivery leaves exactly one row; ``ingest_report`` /
@@ -121,27 +121,40 @@ the failure mode a dedup memory cannot surface itself: a store that
 silently admits (or drops) everything looks identical to a healthy one
 from the curated table alone.
 
-Plan-size valve (r11): the near-dedup stages build drop-sets FROM the
-batch frame and anti-join them back INTO it — self-referencing joins
-that double the logical plan tree per stage. With text AND media
-near-dedup on, driver-side Catalyst analysis grew exponentially
-(146 s/20-doc batch, measured); an eager ``localCheckpoint`` of the
-batch-sized frame at the stage boundaries truncates lineage and
-restores flat per-batch latency (~7×). Lineage loss is safe: a lost
-block kills the batch job and the commit-marker replay converges it.
+The batch body is two declared lists and one loop over each. ``_GATES``
+holds the funnel: each gate is a name, an enable predicate over the
+config and the batch, and a step — a row gate maps the survivors to
+fewer survivors (scrub, policy, host, exact text/media, store dup), a
+near gate returns drop-sets the loop anti-joins on ``doc_id``. The
+loop taps and wall-marks every gate the same way, and the stats row's
+schema is derived from the same list. Near gates build their drop-sets
+from ``base``, one eager ``localCheckpoint`` of the survivors taken
+before the first of them: a near-dedup join references the frame it
+drops from, so without the checkpoint the plan tree doubled per stage
+and driver-side analysis grew exponentially (146 s for a 20-doc batch
+with text and media near-dedup on). Deriving every drop-set from one
+frame is exact because band and probe rows are per-row functions of one
+doc and dropping an already-dropped id is a no-op; the media in-batch
+pairs are restricted to pairs whose smaller id survived the earlier
+near gates. ``phash_near_dup``'s ``media_max_band_freq`` counts band
+frequency over its input, so with that valve set after text near-dedup
+the media gates re-base on a checkpoint of the text survivors. Lost
+checkpoint blocks kill the batch job, which the commit-marker replay
+converges.
 
-Recache data-loss fix (r11, latent since r10): the final survivor
-frame is ALSO materialized by eager ``localCheckpoint`` rather than
-``persist()``. The store appends write into paths the survivor plan
-READS (fps store, band stores), and Spark's CacheManager responds to
-each such write with recacheByPath — recomputing the cached plan with
-a fresh file listing that includes the segment just written, so the
-batch matched its OWN band rows and recached EMPTY: every append after
-the first silently wrote zero rows (batch fingerprints lost; a later
-exact resend would be re-admitted). Lineage truncation leaves no path
-reference for recacheByPath to find. Pinned by
+The survivors are materialized by a second eager ``localCheckpoint``,
+not ``persist()``: the sinks write into paths the survivor plan reads
+(fingerprint and band stores), and CacheManager's recacheByPath would
+recompute a cached plan with a listing that includes the segment just
+written, so the batch would match its own band rows and every later
+sink would write zero rows. Lineage truncation leaves no path reference
+to recache (pinned by
 test_band_store_append_does_not_recache_away_fingerprints and the
-all-stores soak.
+all-stores soak). ``_SINKS`` then lists the per-batch segment writes
+(curated rows, fingerprints, band stores, text and vector index
+segments, host edges); ``pipeline.run_sinks``, the runner the ADS-B
+cascade shares, runs them concurrently, and the commit marker follows
+only when every one succeeded.
 
 Scale shape: the anti-join shuffles on the 16-byte fingerprint — the
 store side is the accumulated KEPT set (post-dedup, so it grows with
@@ -164,15 +177,34 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import time
 import uuid
+from dataclasses import dataclass, field
+from functools import partial, reduce
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
-from ..operators.curation import quality_signals
+from ..functions.texttools import md5_long
+from ..operators.curation import SPLIT_SALT, _langid_enrich, quality_signals
+from ..operators.dedup import minhash_band_rows, minhash_lsh_pairs
+from ..operators.graph import host_edges
+from ..operators.multimodal import perceptual_hash, phash_band_keys, phash_near_dup
+from ..operators.scrub import pii_counts, pii_redact
+from ..operators.search import append_text_index, init_text_index
+from ..operators.similarity import hashed_text_embeddings
+from ..operators.vecindex import (
+    _gen_name as _vec_gen,
+    append_vector_index,
+    init_vector_index,
+)
+from ..plans.genstore import enforce_law
 from ..plans.storeio import storeio_for
-from .pipeline import _checkpoint_run_id
+from .pipeline import _checkpoint_run_id, run_sinks
 
 _STORE_POINTER = "_STORE"
 _COMMITS_DIR = "_commits"
@@ -181,35 +213,19 @@ _COMMITS_DIR = "_commits"
 _COMMITTED_MANIFEST = "_COMMITTED"
 _FOLDED_MANIFEST = "_FOLDED"
 
-# one row per committed batch in ingest_log/ — the streaming funnel's
-# per-gate health record (what an operator alarms on: a near-dedup
-# store silently admitting everything shows up as dropped_*_store
-# flatlining at 0 while the corpus grows). Gates that are configured
-# off report 0, keeping the schema stable for dashboards.
-_INGEST_LOG_SCHEMA = (
-    "ts double, run_id string, rows_in long, dropped_policy long, "
-    "dropped_host long, dropped_exact_text long, dropped_exact_media long, "
-    "dropped_store_dup long, dropped_text_near_batch long, "
-    "dropped_text_near_store long, dropped_media_near_batch long, "
-    "dropped_media_near_store long, admitted long, fps_segments int, "
-    "curated_segments int, text_band_segments int, phash_band_segments int"
-)
-_INGEST_GATES = (
-    "policy",
-    "host",
-    "exact_text",
-    "exact_media",
-    "store_dup",
-    "text_near_batch",
-    "text_near_store",
-    "media_near_batch",
-    "media_near_store",
-)
-
-
 def _clear_segment(path: str, seg: str) -> None:
     io = storeio_for(path)
     io.rmtree(os.path.join(path, f"batch_id={seg}"))
+
+
+def _append_segment(df: DataFrame, path: str, seg: str) -> None:
+    """Append ``df`` as the ``batch_id=<seg>`` segment of a batch-keyed store."""
+    (
+        df.withColumn("batch_id", F.lit(seg))
+        .write.mode("append")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def _seg_dirs(path: str) -> list[str]:
@@ -227,7 +243,7 @@ def _live_seg_dirs(path: str) -> list[str]:
     """``batch_id=`` entries not folded into the pointed generation —
     the one live-segment resolution every ``batch_id=``-layout consumer
     shares (reader, compactor, segment counter), so a manifest-format
-    change lands in exactly one place (r12 review)."""
+    change lands in exactly one place."""
     from ..plans.genstore import folded_set, gen_name
 
     folded = folded_set(path, gen_name(path))
@@ -278,7 +294,7 @@ def stored_embed_law_params(vector_index_path: str) -> dict[str, int]:
     embedded (external embeddings carry their own law). Maintenance and
     probe tooling read this instead of trusting constructor defaults —
     a store embedded under ngram=(1,2) probed or appended under the
-    default unigram law would silently degrade recall (r12 review)."""
+    default unigram law would silently degrade recall."""
     return stored_band_law_params(vector_index_path, marker=EMBED_LAW_MARKER)
 
 
@@ -292,7 +308,7 @@ def _free_local_checkpoint(df: DataFrame) -> None:
     unpersisting THAT frees them at batch end instead of whenever the
     ContextCleaner gets around to GC'ing the unreferenced RDD — the
     difference between bounded and unbounded block-manager growth in a
-    long-lived driver loop (r11 advice). Best-effort by design: if the
+    long-lived driver loop. Best-effort by design: if the
     plan-node shape ever shifts, ContextCleaner GC still collects the
     blocks (correct, just lazy)."""
     try:
@@ -301,11 +317,41 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+@dataclass
+class _Batch:
+    """What the gates and sinks of one ``process_batch`` call read."""
+
+    spark: SparkSession
+    docs: DataFrame
+    seg: str
+    host_on: bool
+    media_on: bool
+    media_bands: bool
+    ranks: DataFrame | None  # the host-rank generation, None = no host gate
+    base: DataFrame | None = None  # the valve checkpoint near gates read
+    drops: list = field(default_factory=list)  # drop-sets applied since base
+    fresh: DataFrame | None = None  # the checkpointed survivors sinks read
+
+
+@dataclass(frozen=True)
+class _Gate:
+    """One funnel gate. ``step`` is ``(ing, batch, frame) -> frame``; for
+    a ``near`` gate it is ``(ing, batch) -> [drop-set, ...]`` over
+    ``batch.base``. ``survivors(ing)`` true: the drop-sets must be built
+    over the current survivors rather than ``base``."""
+
+    name: str
+    enabled: Callable[..., bool]
+    step: Callable
+    near: bool = False
+    survivors: Callable[..., bool] = lambda ing: False
+
+
 class MaintenanceLease:
     """The token ``CurationIngest.maintenance_lease()`` yields: a
     context manager over the store's ``.maintain_lock`` writer lock
     whose entered instance doubles as proof-of-lease for the
-    maintenance methods' ``lease=`` parameter (r13 verdict item 5).
+    maintenance methods' ``lease=`` parameter.
     ``held`` is True only inside the ``with`` block — a token that
     escaped its block fails the check loudly instead of vouching for
     a lock that was already released."""
@@ -366,17 +412,11 @@ class CurationIngest:
         host_rank_iterations: int = 5,
         host_min_rank_pct: float | None = None,
         parallel_appends: bool = True,
-        # derive ALL near-dedup drop-sets from the single
-        # valve_ckpt_funnel checkpoint instead of taking a second
-        # full-frame checkpoint between the text and media stages (r16
-        # floor cut — see the fused-valve note in process_batch); False
-        # keeps the legacy two-checkpoint form for A/B and debugging
-        fused_valves: bool = True,
         # lease discipline for the maintenance jobs: False warns on a
         # lease-less maintain against a leased store (ad-hoc /
         # notebook-friendly); True raises. The curate-maintain CLI runs
         # under True — it holds the lease anyway, so strictness is free
-        # there (r14 verdict item 6).
+        # there.
         strict_lease: bool = False,
     ):
         # the commit-metadata seam (plans/storeio.py): resolves the
@@ -435,11 +475,10 @@ class CurationIngest:
         self.host_min_rank_pct = host_min_rank_pct
         self.host_edges_path = os.path.join(base_dir, "host_edges")
         self.host_ranks_path = os.path.join(base_dir, "host_ranks")
-        # run the independent per-batch store appends from concurrent
-        # driver threads (r12 floor cut — see process_batch); False
-        # keeps the sequential form for A/B and debugging
+        # run the batch's sinks from concurrent driver threads
+        # (pipeline.run_sinks); False runs them in order, the reference
+        # of the concurrency parity test
         self.parallel_appends = parallel_appends
-        self.fused_valves = fused_valves
         self.ingest_log_path = os.path.join(base_dir, "ingest_log")
         # per-stage wall clock of the LAST process_batch call, stage
         # name -> seconds (see _mark in process_batch); the floor
@@ -554,151 +593,183 @@ class CurationIngest:
     # -- the funnel body (used by both batch and streaming) ---------------
 
     def process_batch(self, docs: DataFrame, batch_id: int | None = None) -> None:
-        spark = docs.sparkSession
+        """One micro-batch: the enabled ``_GATES`` in order, an eager
+        ``localCheckpoint`` of the survivors, the enabled ``_SINKS``
+        through ``pipeline.run_sinks``, the stats row, then the commit
+        marker. The module docstring describes the gate loop and its
+        valve checkpoints."""
         seg = self._seg(batch_id)
         if batch_id is not None and self._is_committed(seg):
-            # the previous attempt finished BOTH appends; redelivery
-            # (foreachBatch crash after process_batch returned but before
-            # the checkpoint commit) must not clear-and-rewrite — after a
-            # fingerprint compaction folded the segment, the rewrite would
-            # be suppressed by its own fingerprints and the data lost
-            self.last_stage_wall = {}  # no stale attribution from the
-            return  # previous batch on a no-op redelivery
-        # replay safety FIRST: a crashed attempt's fingerprints must not
-        # suppress this replay's own rows at the anti-join below
-        _clear_segment(self.curated_path, seg)
-        _clear_segment(self.fps_path, seg)
-        _clear_segment(self.host_edges_path, seg)
-        _clear_segment(self.phash_bands_path, seg)
-        _clear_segment(self.text_bands_path, seg)
-        _clear_segment(self.ingest_log_path, seg)
-
-        # per-gate observability (r11): named row-count taps piggyback
-        # the curated write's own job via CollectMetrics — ZERO extra
-        # passes, no extra actions, and (verified) a tap re-referenced
-        # by a downstream self-join still fires exactly once per query.
-        # The stats row is written under the same batch_id segment +
-        # commit marker as the data, so replay can't double-count.
-        from pyspark.sql import Observation
+            # the previous attempt finished every sink; a rewrite would be
+            # suppressed by its own fingerprints once compaction folded
+            # the segment, so redelivery is a no-op
+            self.last_stage_wall = {}
+            return
+        # replay safety first: a crashed attempt's fingerprints must not
+        # suppress this replay's own rows at the store anti-join
+        for path in (
+            self.curated_path, self.fps_path, self.host_edges_path,
+            self.phash_bands_path, self.text_bands_path, self.ingest_log_path,
+        ):
+            _clear_segment(path, seg)
 
         taps: list[tuple[str, Observation]] = []
-        # every eager localCheckpoint this batch takes, freed in the
-        # finally below (see _free_local_checkpoint)
-        ckpts: list[DataFrame] = []
-        # per-stage wall attribution (r11 verdict item 2): every Spark
-        # action in the batch gets a named wall-clock bucket, published
-        # as self.last_stage_wall — two clock reads per stage, no Spark
-        # cost. The all-stores floor benchmark reads this to attribute
-        # the per-batch fixed cost job by job.
-        import time as _time
-
+        ckpts: list[DataFrame] = []  # freed in the finally below
         walls: dict[str, float] = {}
-        _t_last = [_time.perf_counter()]
-
-        def _mark(stage: str) -> None:
-            now = _time.perf_counter()
-            walls[stage] = round(walls.get(stage, 0.0) + now - _t_last[0], 3)
-            _t_last[0] = now
-
         self.last_stage_wall = walls
+        t_last = [time.perf_counter()]
 
-        def _tap(df: DataFrame, stage: str) -> DataFrame:
+        def mark(stage: str) -> None:
+            now = time.perf_counter()
+            walls[stage] = round(now - t_last[0], 3)
+            t_last[0] = now
+
+        def tap(df: DataFrame, stage: str) -> DataFrame:
             if self.plan_probe is not None:
                 self.plan_probe(stage, df)
             ob = Observation()
             taps.append((stage, ob))
             return df.observe(ob, F.count(F.lit(1)).alias("n"))
 
-        # FUSED projective stages (r11, mirrors the batch funnel's
-        # fuse_projective path): scrub + langid + host attach compose
-        # column-wise on ONE batch scan — only the aggregate-bearing
-        # quality signals keep the doc_id join (their Gopher bigram
-        # groupBy forces that exchange anyway)
-        from ..operators.curation import _langid_enrich
-        from ..operators.scrub import pii_counts, pii_redact
+        def checkpoint(df: DataFrame, stage: str) -> DataFrame:
+            df = df.localCheckpoint(eager=True)
+            ckpts.append(df)
+            mark(stage)
+            return df
 
+        spark = docs.sparkSession
         host_on = self.host_col is not None and self.host_col in docs.columns
+        media_on = self.media_dedup and self.media_col in docs.columns
+        b = _Batch(
+            spark=spark, docs=docs, seg=seg, host_on=host_on, media_on=media_on,
+            media_bands=media_on and self.media_near_dedup,
+            ranks=self.read_host_ranks(spark) if host_on else None,
+        )
+        try:
+            fresh = docs
+            for g in _GATES:
+                if not g.enabled(self, b):
+                    continue
+                if g.near:
+                    if b.base is None or (b.drops and g.survivors(self)):
+                        fresh = checkpoint(
+                            fresh,
+                            "valve_ckpt_funnel" if b.base is None
+                            else "valve_ckpt_text_probe",
+                        )
+                        b.base, b.drops = fresh, []
+                    sets = g.step(self, b)
+                    b.drops += sets
+                    for d in sets:
+                        fresh = fresh.join(d, "doc_id", "left_anti")
+                else:
+                    fresh = g.step(self, b, fresh)
+                fresh = tap(fresh, g.name)
+                mark(g.name)
+            if self.assign_splits:
+                # split = salted hash of the exact fingerprint: a per-row
+                # function, so it matches the batch operator's exact mode and
+                # the same text lands in the same split in every batch
+                bucket = (
+                    md5_long(F.concat(F.lit(f"{SPLIT_SALT}|"), F.col("fingerprint")))
+                    % 10
+                ).cast("int")
+                fresh = fresh.withColumn("split_bucket", bucket).withColumn(
+                    "split",
+                    F.when(bucket < 8, "train")
+                    .when(bucket < 9, "val")
+                    .otherwise("test"),
+                )
+            # an eager localCheckpoint, not persist(): the sinks write into
+            # paths the survivor plan reads (module docstring, recacheByPath)
+            if self.plan_probe is not None:
+                self.plan_probe("final", fresh)
+            b.fresh = checkpoint(fresh, "materialize")
+            walls.update(run_sinks(
+                spark,
+                [(name, partial(fn, self, b))
+                 for name, enabled, fn in _SINKS if enabled(self, b)],
+                parallel=self.parallel_appends,
+            ))
+            mark("store_appends_total")
+            # every tap is resolved by now (no extra Spark action); the
+            # row lands inside the commit envelope, so a replay leaves
+            # exactly one stats row per batch
+            self._write_stats_row_driver_side(self._ingest_stats_row(taps), seg)
+            mark("stats_row_write")
+            if batch_id is not None:
+                self._write_marker(seg)
+        finally:
+            for df_ in ckpts:
+                _free_local_checkpoint(df_)
+
+    # -- the gate steps (declared in _GATES) ---------------------------------
+
+    def _gate_scrub(self, b: "_Batch", docs: DataFrame) -> DataFrame:
+        # scrub + langid + host attach compose column-wise on one batch
+        # scan; only the quality signals (policy gate) need the doc_id join
         counts = pii_counts(F.col("text"))
         flag = None
         for c in counts:
             term = c > 0
             flag = term if flag is None else flag | term
-        base = docs.select(
+        cols = docs.select(
             F.col("doc_id"),
             F.col("text").alias("__text"),
-            *([F.col(self.host_col).alias("__host")] if host_on else []),
+            *([F.col(self.host_col).alias("__host")] if b.host_on else []),
             *counts,
             flag.alias("has_pii"),
             pii_redact(F.col("text")).alias("clean_text"),
         )
-        scrubbed = _tap(_langid_enrich(base, "__text").drop("__text"), "in")
-        # LEFT join so a doc that produces no quality row (e.g. token-less
-        # text) reaches the policy filter with a NULL quality_score and
-        # fails the >= gate THERE — the 'policy' tap's drop count is then
-        # exact instead of silently absorbing inner-join losses (r11
-        # advice). Catalyst's EliminateOuterJoin rewrites this back to an
-        # inner join under the null-rejecting predicate, so the physical
-        # plan is unchanged; only the attribution semantics are.
-        scored = scrubbed.join(quality_signals(docs), "doc_id", "left")
+        return _langid_enrich(cols, "__text").drop("__text")
+
+    def _gate_policy(self, b: "_Batch", df: DataFrame) -> DataFrame:
+        # LEFT join, so a doc with no quality row (token-less text) fails
+        # the >= below with a NULL score and counts as a policy drop;
+        # EliminateOuterJoin plans it as the inner join
+        scored = df.join(quality_signals(b.docs), "doc_id", "left")
         cond = F.col("quality_score") >= self.min_quality
         if self.keep_langs is not None:
             cond = cond & F.col("predicted_lang").isin(list(self.keep_langs))
         if self.drop_pii_docs:
             cond = cond & ~F.col("has_pii")
-        filtered = _tap(
-            scored.filter(cond).withColumn(
-                "fingerprint", F.md5(F.coalesce(F.col("clean_text"), F.lit("")))
-            ),
-            "policy",
+        return scored.filter(cond).withColumn(
+            "fingerprint", F.md5(F.coalesce(F.col("clean_text"), F.lit("")))
         )
-        if host_on:
-            # domain-reputation gate (the RefinedWeb-lineage prior) as a
-            # DIMENSION lookup: the stored rank generation — recomputed
-            # periodically by recompute_host_ranks over the ACCUMULATED
-            # edge table, NOT propagated per batch — broadcast-joins
-            # onto the batch. Until the first recompute there is no
-            # generation and no gate (the lambda split: per-batch work
-            # is batch-sized, the corpus-sized rank job is amortized
-            # maintenance, exactly like near-dedup compaction).
-            ranks = self.read_host_ranks(spark)
-            if ranks is not None:
-                gate = F.coalesce(F.col("host_trustrank_fp"), F.lit(0)) > 0 \
-                    if "host_trustrank_fp" in ranks.columns else F.lit(True)
-                if self.host_min_rank_pct is not None:
-                    cutoff = ranks.agg(
-                        F.percentile_approx(
-                            "host_pagerank_fp",
-                            float(self.host_min_rank_pct),
-                            10_000,
-                        ).alias("c")
-                    ).collect()[0]["c"]
-                    gate = gate & (F.col("host_pagerank_fp") >= F.lit(cutoff))
-                # __host rode along in the fused base projection — the
-                # rank attach is the broadcast join alone
-                filtered = _tap(
-                    filtered.join(
-                        F.broadcast(ranks.withColumnRenamed("host", "__host")),
-                        "__host",
-                        "left",
-                    )
-                    .filter(gate)
-                    .drop(*[c for c in ranks.columns if c != "host"]),
-                    "host",
-                )
-            # the fused __host column served the gate (or no generation
-            # exists yet) — it must not leak into the curated table
-            filtered = filtered.drop("__host")
-        media_on = self.media_dedup and self.media_col in docs.columns
-        if media_on:
-            # media as a curation citizen (r9): the payload rides along
-            # into the curated table (the near-dup compaction hashes it)
-            # and its md5 — 'm|'-prefixed so it can share the text
-            # fingerprint store without key-space collision — drives
-            # exact media dedup within the batch and across batches.
-            # NULL payloads get a NULL media_fp: null keys never match
-            # an equi/anti join, so docs without media are exempt.
-            filtered = filtered.join(
-                docs.select("doc_id", self.media_col), "doc_id"
+
+    def _gate_host(self, b: "_Batch", df: DataFrame) -> DataFrame:
+        # domain reputation as a dimension lookup: the stored rank
+        # generation (recompute_host_ranks, periodic maintenance) is
+        # broadcast-joined onto the batch on the fused __host column
+        ranks = b.ranks
+        gate = F.coalesce(F.col("host_trustrank_fp"), F.lit(0)) > 0 \
+            if "host_trustrank_fp" in ranks.columns else F.lit(True)
+        if self.host_min_rank_pct is not None:
+            cutoff = ranks.agg(
+                F.percentile_approx(
+                    "host_pagerank_fp", float(self.host_min_rank_pct), 10_000
+                ).alias("c")
+            ).collect()[0]["c"]
+            gate = gate & (F.col("host_pagerank_fp") >= F.lit(cutoff))
+        return (
+            df.join(
+                F.broadcast(ranks.withColumnRenamed("host", "__host")),
+                "__host",
+                "left",
+            )
+            .filter(gate)
+            .drop(*[c for c in ranks.columns if c != "host"])
+        )
+
+    def _gate_exact_text(self, b: "_Batch", df: DataFrame) -> DataFrame:
+        if b.host_on:
+            df = df.drop("__host")  # served the host gate; not curated
+        if b.media_on:
+            # the payload rides into the curated table; its md5,
+            # 'm|'-prefixed to share the fingerprint store, keys exact
+            # media dedup. A NULL payload's NULL media_fp never joins.
+            df = df.join(
+                b.docs.select("doc_id", self.media_col), "doc_id"
             ).withColumn(
                 "media_fp",
                 F.when(
@@ -706,647 +777,232 @@ class CurationIngest:
                     F.concat(F.lit("m|"), F.md5(F.col(self.media_col))),
                 ),
             )
-        # within-batch exact dedup: lowest doc_id represents each text
-        # (semi-join on the (fingerprint, min doc_id) pairs — map-side
-        # partial agg, and the same fingerprint shuffle the store
-        # anti-join below reuses)
-        batch_unique = _tap(
-            filtered.join(
-                filtered.groupBy("fingerprint").agg(
-                    F.min("doc_id").alias("doc_id")
-                ),
-                ["fingerprint", "doc_id"],
-                "left_semi",
-            ),
-            "exact_text",
+        # the lowest doc_id represents each text
+        return df.join(
+            df.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id")),
+            ["fingerprint", "doc_id"],
+            "left_semi",
         )
-        if media_on:
-            # within-batch exact MEDIA dedup over the text survivors:
-            # lowest doc_id represents each payload; computed post-text-
-            # dedup so a text-dedup loser can't claim a media group's
-            # representative slot and drag the whole group down with it
-            media_losers = batch_unique.filter(
-                F.col("media_fp").isNotNull()
-            ).join(
-                batch_unique.filter(F.col("media_fp").isNotNull())
-                .groupBy("media_fp")
-                .agg(F.min("doc_id").alias("doc_id")),
-                ["media_fp", "doc_id"],
-                "left_anti",
-            ).select("doc_id")
-            batch_unique = _tap(
-                batch_unique.join(media_losers, "doc_id", "left_anti"),
-                "exact_media",
-            )
-        # cross-batch: drop anything an earlier batch already kept. The
-        # store is read in parts — the bucketed compacted table (its scan
-        # co-locates the join: no Exchange on the store side) and the
-        # not-yet-compacted segments (small: fingerprints since the last
-        # compaction) — and anti-joined part by part so the bucketed
-        # layout's co-location isn't destroyed by a union
-        fresh = batch_unique
-        for part in self.fingerprint_store_parts(spark):
-            fresh = fresh.join(part, "fingerprint", "left_anti")
-            if media_on:
-                fresh = fresh.join(
+
+    def _gate_exact_media(self, b: "_Batch", df: DataFrame) -> DataFrame:
+        # over the text survivors, so a text-dedup loser cannot take a
+        # media group's representative slot
+        keyed = df.filter(F.col("media_fp").isNotNull())
+        losers = keyed.join(
+            keyed.groupBy("media_fp").agg(F.min("doc_id").alias("doc_id")),
+            ["media_fp", "doc_id"],
+            "left_anti",
+        ).select("doc_id")
+        return df.join(losers, "doc_id", "left_anti")
+
+    def _gate_store_dup(self, b: "_Batch", df: DataFrame) -> DataFrame:
+        # anti-joined part by part, so the bucketed compacted part keeps
+        # its co-located (exchange-free) store side
+        for part in self.fingerprint_store_parts(b.spark):
+            df = df.join(part, "fingerprint", "left_anti")
+            if b.media_on:
+                df = df.join(
                     part.withColumnRenamed("fingerprint", "media_fp"),
                     "media_fp",
                     "left_anti",
                 )
-        fresh = _tap(fresh, "store_dup")
-        media_bands_on = media_on and self.media_near_dedup
-        near_stages = int(self.text_near_dedup) + int(media_bands_on)
-        # FUSED VALVES (r16 floor cut): every near-dedup drop-set below
-        # derives from the ONE frame the valve checkpoint materializes,
-        # so the legacy second full-frame checkpoint between the text
-        # and media stages (one extra serialized job + batch-row
-        # materialization per batch) is gone. Equivalence: band/probe
-        # rows are per-row functions of one doc (restriction-stable),
-        # a store match against an id an earlier stage already dropped
-        # is an anti-join no-op, and the media in-batch pair set over
-        # the superset restricted to pairs whose SMALLER id survived
-        # the text stages equals the pair set computed over the text
-        # survivors. The one frequency-dependent step breaks that law:
-        # phash_near_dup's max_band_freq counts band frequency over its
-        # INPUT, so with the hot-band valve configured alongside text
-        # near-dedup the pair set is not restriction-stable and the
-        # legacy checkpointed base is kept for exactly that config.
-        fused = self.fused_valves and not (
-            media_bands_on
-            and self.text_near_dedup
-            and self.media_max_band_freq is not None
+        return df
+
+    def _gate_text_near_batch(self, b: "_Batch") -> list[DataFrame]:
+        # exact-Jaccard-verified MinHash-LSH pairs collapse to the
+        # smallest id
+        pairs = minhash_lsh_pairs(
+            b.base.select("doc_id", F.col("clean_text").alias("text")),
+            threshold=self.text_dedup_threshold,
+            k=self.text_minhash_k,
+            bands=self.text_bands,
+            w=self.text_shingle_w,
         )
-        if near_stages:
-            # PLAN-SIZE VALVE (r11): each near-dedup stage below builds
-            # drop-sets FROM `fresh` and anti-joins them back INTO
-            # `fresh` — a self-referencing join that doubles the logical
-            # plan tree every time. With both text and media stages on,
-            # Catalyst ANALYSIS time (driver-side, not execution) grew
-            # exponentially: 146 s for a 20-doc batch, measured. An
-            # eager localCheckpoint of the batch-sized frame truncates
-            # the lineage so every stage references a flat scan; the
-            # work up to here runs exactly once (downstream reads the
-            # checkpointed blocks). Block loss on a real cluster kills
-            # the batch job, which the commit-marker replay discipline
-            # already converges — never wrong results.
-            fresh = fresh.localCheckpoint(eager=True)
-            ckpts.append(fresh)
-            _mark("valve_ckpt_funnel")
-        # the single materialized frame the fused drop-sets derive from
-        # (identical to `fresh` until the first anti-join below)
-        base = fresh
-        text_drop_sets: list[DataFrame] = []
-        if self.text_near_dedup:
-            # per-batch TEXT near-dedup against the stored MinHash band
-            # index (r10): the text twin of the phash band store below.
-            # Within the batch, exact-Jaccard-verified LSH pairs collapse
-            # to the smallest id; across batches, the probe is one
-            # equi-join on the single bkey long and the verify is
-            # SIGNATURE AGREEMENT (#equal minhash positions / k >=
-            # threshold — the MinHash Jaccard estimate), so it never
-            # touches corpus text and stays batch-bounded. The periodic
-            # compact_curated pass remains the exact-Jaccard authority;
-            # this is the bounded fast path for "near-copy of
-            # already-kept text". Band law constants (text_minhash_k /
-            # text_bands / text_shingle_w) are the store's schema —
-            # changing them invalidates the accumulated index, which the
-            # law marker turns into a loud failure.
-            from ..operators.dedup import minhash_band_rows, minhash_lsh_pairs
+        return [pairs.select(F.col("id_b").alias("doc_id")).distinct()]
 
-            self._enforce_band_law(self.text_bands_path, self._text_band_law())
-            batch_texts = base.select(
-                "doc_id", F.col("clean_text").alias("text")
+    def _gate_text_near_store(self, b: "_Batch") -> list[DataFrame]:
+        # one bkey equi-join per store part, verified by signature
+        # agreement (#equal minhash positions / k, the Jaccard estimate):
+        # never touches corpus text
+        self._enforce_band_law(self.text_bands_path, self._text_band_law())
+        probe = self._text_band_rows(b.base)
+        agree = F.aggregate(
+            F.zip_with("sig", "_ssig", lambda a, b: (a == b).cast("int")),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        k = float(self.text_minhash_k)
+        return [
+            probe.join(part.withColumnRenamed("sig", "_ssig"), "bkey")
+            .filter(agree / F.lit(k) >= self.text_dedup_threshold)
+            .select(F.col("id").alias("doc_id"))
+            .distinct()
+            for part in self.text_band_store_parts(b.spark)
+        ]
+
+    def _gate_media_near_batch(self, b: "_Batch") -> list[DataFrame]:
+        # pairs come id_a < id_b, so dropping every id_b collapses chains
+        # to their smallest member
+        pairs = phash_near_dup(
+            self._media_hashes(b.base),
+            max_hamming=self.media_max_hamming,
+            bands=self.media_bands,
+            max_band_freq=self.media_max_band_freq,
+        )
+        if b.drops:
+            # the pairs span ids earlier near gates dropped since `base`;
+            # a pair whose smaller id was dropped must not claim its
+            # larger sibling (id_b needs no filter: re-dropping is a no-op)
+            dropped = reduce(DataFrame.unionByName, b.drops)
+            pairs = pairs.join(
+                dropped.withColumnRenamed("doc_id", "id_a"), "id_a", "left_anti"
             )
-            in_batch = (
-                minhash_lsh_pairs(
-                    batch_texts,
-                    threshold=self.text_dedup_threshold,
-                    k=self.text_minhash_k,
-                    bands=self.text_bands,
-                    w=self.text_shingle_w,
+        return [pairs.select(F.col("id_b").alias("doc_id")).distinct()]
+
+    def _gate_media_near_store(self, b: "_Batch") -> list[DataFrame]:
+        # one bkey equi-join per store part, verified by
+        # bit_count(XOR) <= max_hamming
+        self._enforce_band_law(self.phash_bands_path, self._phash_band_law())
+        probe = self._media_band_rows(b.base)
+        return [
+            probe.join(part.withColumnRenamed("phash", "_sph"), "bkey")
+            .filter(
+                F.bit_count(F.col("phash").bitwiseXOR(F.col("_sph")))
+                <= int(self.media_max_hamming)
+            )
+            .select(F.col("id").alias("doc_id"))
+            .distinct()
+            for part in self.phash_band_store_parts(b.spark)
+        ]
+
+    def _text_band_rows(self, df: DataFrame) -> DataFrame:
+        """(id, bkey, sig) MinHash band rows of ``df``'s clean text, under
+        the store's band law: the probe side and the appended rows."""
+        return minhash_band_rows(
+            df.select("doc_id", F.col("clean_text").alias("text")),
+            id_col="doc_id",
+            k=self.text_minhash_k,
+            bands=self.text_bands,
+            w=self.text_shingle_w,
+        )
+
+    def _media_hashes(self, df: DataFrame) -> DataFrame:
+        return perceptual_hash(
+            df.filter(F.col(self.media_col).isNotNull()).select(
+                F.col("doc_id").alias("media_id"), self.media_col
+            ),
+            backend=self.media_backend,
+        )
+
+    def _media_band_rows(self, df: DataFrame) -> DataFrame:
+        """(id, phash, bkey) band rows of ``df``'s payloads: the probe
+        side and the appended rows."""
+        return phash_band_keys(self._media_hashes(df), bands=self.media_bands)
+
+    # -- the sinks (declared in _SINKS); each reads the checkpointed
+    # survivors or the raw batch and writes its own segment -----------------
+
+    def _sink_text_index(self, b: "_Batch") -> None:
+        # a name-keyed index segment over an empty bootstrap generation:
+        # no batch ever initializes the index from data, so a crash
+        # between init and marker cannot double-count
+        if self._text_index_law is None:
+            # n_buckets/positional are fixed for the store's life: read
+            # once per ingest object, not per batch
+            info = init_text_index(
+                b.spark, self.index_path, n_buckets=self.text_index_buckets
+            )
+            self._text_index_law = (
+                int(info["n_buckets"]),
+                bool(info["positional"]),
+            )
+        append_text_index(
+            b.fresh.select("doc_id", F.col("clean_text").alias("text")),
+            self.index_path,
+            b.seg,
+            law=self._text_index_law,
+            return_stats=False,
+        )
+
+    def _sink_vector_index(self, b: "_Batch") -> None:
+        # a name-keyed vector index segment; init is bootstrap-only (seed
+        # centroids, dim from the first embedded batch)
+        if self.vec_col in b.docs.columns:
+            vecs = b.fresh.join(
+                b.docs.select("doc_id", self.vec_col), "doc_id"
+            ).filter(F.col(self.vec_col).isNotNull())
+        else:
+            # no embedding column: the deterministic hashed-projection
+            # embedder over the survivors' text, under a recorded law
+            enforce_law(
+                self.vector_index_path,
+                self._embed_law(),
+                marker=EMBED_LAW_MARKER,
+                what="vector index embedding law",
+            )
+            vecs = (
+                hashed_text_embeddings(
+                    b.fresh.select("doc_id", F.col("clean_text").alias("text")),
+                    dim=self.embed_dim,
+                    ngram=self.embed_ngram,
                 )
-                .select(F.col("id_b").alias("doc_id"))
-                .distinct()
+                .withColumnRenamed("embedding", self.vec_col)
+                # an exact-zero vector carries no signal and cosines to NaN
+                .filter(F.exists(self.vec_col, lambda x: x != 0))
             )
-            if fused:
-                text_drop_sets.append(in_batch)
-            fresh = _tap(
-                fresh.join(in_batch, "doc_id", "left_anti"), "text_near_batch"
-            )
-            # probe-side band rows (lazy, over the pre-persist chain);
-            # the rows APPENDED to the store are rebuilt from the
-            # persisted survivors in the commit block below, so the
-            # write does not re-evaluate this whole funnel chain. Fused:
-            # built from the flat `base` (a probe row for an id the
-            # in-batch stage already dropped can only re-drop it), so
-            # the probe tree references the checkpoint, not the chain.
-            probe_text_bands = minhash_band_rows(
-                (base if fused else fresh).select(
-                    "doc_id", F.col("clean_text").alias("text")
-                ),
+        if _vec_gen(self.vector_index_path) is None:
+            probe_row = vecs.select(self.vec_col).first()
+            if probe_row is not None:
+                init_vector_index(
+                    b.spark,
+                    self.vector_index_path,
+                    dim=len(probe_row[0]),
+                    n_lists=self.vector_n_lists,
+                )
+        if _vec_gen(self.vector_index_path) is not None:
+            append_vector_index(
+                vecs.select("doc_id", self.vec_col),
+                self.vector_index_path,
+                b.seg,
                 id_col="doc_id",
-                k=self.text_minhash_k,
-                bands=self.text_bands,
-                w=self.text_shingle_w,
+                vec_col=self.vec_col,
+                centroid_cache=self._vec_centroid_cache,
             )
-            k = self.text_minhash_k  # same constant the law string records
-            agree = F.aggregate(
-                F.zip_with(
-                    "sig", "_ssig", lambda a, b: (a == b).cast("int")
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            for part in self.text_band_store_parts(spark):
-                near = (
-                    probe_text_bands.join(
-                        part.withColumnRenamed("sig", "_ssig"), "bkey"
-                    )
-                    .filter(agree / F.lit(float(k)) >= self.text_dedup_threshold)
-                    .select(F.col("id").alias("doc_id"))
-                    .distinct()
+
+    def _sink_host_edges(self, b: "_Batch") -> None:
+        # from the RAW batch: spam hosts' links are how TrustRank
+        # isolates them; the recompute reads the store as a set
+        _append_segment(
+            host_edges(b.docs, host_col=self.host_col, links_col=self.host_links_col),
+            self.host_edges_path,
+            b.seg,
+        )
+
+    def _sink_fingerprints(self, b: "_Batch") -> None:
+        fps = b.fresh.select("fingerprint")
+        if b.media_on:
+            fps = fps.unionByName(
+                b.fresh.filter(F.col("media_fp").isNotNull()).select(
+                    F.col("media_fp").alias("fingerprint")
                 )
-                # ids matched against a later part may include ones an
-                # earlier part already dropped — the anti-join is
-                # idempotent, so no probe-side pruning bookkeeping
-                if fused:
-                    text_drop_sets.append(near)
-                fresh = fresh.join(near, "doc_id", "left_anti")
-            fresh = _tap(fresh, "text_near_store")
-        if media_bands_on and self.text_near_dedup and not fused:
-            # legacy second valve (media hot-band valve configured, or
-            # fused_valves=False): the media stage re-references `fresh`
-            # three ways (hash pass, in-batch pairs, band probes) —
-            # flatten the text stage's joins out of its base first
-            fresh = fresh.localCheckpoint(eager=True)
-            ckpts.append(fresh)
-            _mark("valve_ckpt_text_probe")
-        if media_bands_on:
-            # per-batch perceptual NEAR-dedup against the stored phash
-            # band index (r10): until now a perturbed copy of already-
-            # kept media survived every batch and only fell at the
-            # periodic compaction. The band store gives suppression at
-            # ingest with the fingerprint store's scale shape — the
-            # probe is an equi-join on the single bkey long, verified by
-            # codegen bit_count(XOR) <= max_hamming; the store grows
-            # with unique media, and compaction buckets it on bkey so
-            # the probe co-locates without re-shuffling the store.
-            from ..operators.multimodal import (
-                perceptual_hash,
-                phash_band_keys,
-                phash_near_dup,
             )
+        _append_segment(fps, self.fps_path, b.seg)
 
-            self._enforce_band_law(self.phash_bands_path, self._phash_band_law())
-            hashes = perceptual_hash(
-                (base if fused else fresh)
-                .filter(F.col(self.media_col).isNotNull())
-                .select(F.col("doc_id").alias("media_id"), self.media_col),
-                backend=self.media_backend,
-            )
-            # within-batch: drop any media with a SMALLER-id near-dup in
-            # the batch (pairs come id_a < id_b, so dropping every id_b
-            # collapses chains to their smallest member — slightly more
-            # aggressive than the compaction's connected-components
-            # retention on transitive chains, deterministically so)
-            pairs = phash_near_dup(
-                hashes,
-                max_hamming=self.media_max_hamming,
-                bands=self.media_bands,
-                max_band_freq=self.media_max_band_freq,
-            )
-            if fused and text_drop_sets:
-                # the pair set was generated over `base`, which still
-                # holds the text-stage losers; legacy semantics computed
-                # it over the text SURVIVORS, so a pair whose smaller id
-                # was text-dropped must not claim its larger sibling —
-                # restrict id_a to text survivors (id_b needs no filter:
-                # dropping an already-dropped id is a no-op)
-                tdrops = text_drop_sets[0]
-                for d in text_drop_sets[1:]:
-                    tdrops = tdrops.unionByName(d)
-                pairs = pairs.join(
-                    tdrops.withColumnRenamed("doc_id", "id_a"),
-                    "id_a",
-                    "left_anti",
-                )
-            in_batch_losers = pairs.select(
-                F.col("id_b").alias("doc_id")
-            ).distinct()
-            fresh = _tap(
-                fresh.join(in_batch_losers, "doc_id", "left_anti"),
-                "media_near_batch",
-            )
-            # probe-side band rows only (see the text twin above): the
-            # stored rows are rebuilt from the persisted survivors below.
-            # Fused: built from the full batch hashes (matches on ids an
-            # earlier stage dropped are anti-join no-ops), so no
-            # chain-referencing semi-join is needed.
-            probe_media_bands = phash_band_keys(
-                hashes if fused else hashes.join(
-                    fresh.select(F.col("doc_id").alias("media_id")),
-                    "media_id",
-                    "left_semi",
-                ),
-                bands=self.media_bands,
-            )
-            # cross-batch: a batch hash matching ANY stored band whose
-            # full hash verifies within max_hamming is a near-copy of
-            # already-kept media
-            for part in self.phash_band_store_parts(spark):
-                near = (
-                    probe_media_bands.join(
-                        part.withColumnRenamed("phash", "_sph"), "bkey"
-                    )
-                    .filter(
-                        F.bit_count(
-                            F.col("phash").bitwiseXOR(F.col("_sph"))
-                        )
-                        <= int(self.media_max_hamming)
-                    )
-                    .select(F.col("id").alias("doc_id"))
-                    .distinct()
-                )
-                fresh = fresh.join(near, "doc_id", "left_anti")
-            fresh = _tap(fresh, "media_near_store")
-        if self.assign_splits:
-            # split = salted hash of the exact fingerprint — a pure
-            # per-row function, so the assignment is identical to the
-            # batch operator's exact mode AND stable across batches
-            # (the same text always lands in the same split, no state)
-            from ..functions.texttools import md5_long
-            from ..operators.curation import SPLIT_SALT
-
-            bucket = (
-                md5_long(F.concat(F.lit(f"{SPLIT_SALT}|"), F.col("fingerprint")))
-                % 10
-            ).cast("int")
-            fresh = fresh.withColumn("split_bucket", bucket).withColumn(
-                "split",
-                F.when(bucket < 8, "train")
-                .when(bucket < 9, "val")
-                .otherwise("test"),
-            )
-        # MATERIALIZE the survivors with an eager localCheckpoint, NOT
-        # persist() (r11 data-loss fix): the appends below write into
-        # the very store paths `fresh`'s plan READS (fps store, band
-        # stores), and Spark's CacheManager recacheByPath responds to
-        # each such write by RECOMPUTING any cached plan that reads the
-        # path — with a fresh file listing that now includes the
-        # segment just written, so the batch matched its OWN band rows
-        # (signature agreement 16/16) and recached as EMPTY: every
-        # append after the first wrote zero rows, silently losing the
-        # batch's fingerprints (latent since r10; caught by the r11
-        # all-stores soak). localCheckpoint truncates lineage to a
-        # LogicalRDD — no path reference survives for recacheByPath to
-        # find, so every downstream append reads the same materialized
-        # blocks regardless of write order.
-        if self.plan_probe is not None:
-            self.plan_probe("final", fresh)
-        fresh = fresh.localCheckpoint(eager=True)
-        ckpts.append(fresh)
-        _mark("materialize")
-        try:
-            (
-                fresh.withColumn("batch_id", F.lit(seg))
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .parquet(self.curated_path)
-            )
-            _mark("curated_write")
-            # ---- independent store appends (r12 floor cut) -------------
-            # Every append below reads the checkpointed `fresh` (or the
-            # raw `docs` for host edges); none depends on another, and
-            # the commit marker is written only after ALL complete, so
-            # ORDER is free (the pre-r11 "before the fingerprint append"
-            # ordering stopped being load-bearing with the checkpoint
-            # valves). They therefore run CONCURRENTLY from driver
-            # threads: at small batches each append is a tiny job that
-            # leaves local[N] (or a cluster) mostly idle, and the
-            # sequential form paid one full job-scheduling latency per
-            # store — the dominant share of the all-stores per-batch
-            # floor after the r12 stats-row cut. Spark's scheduler is
-            # thread-safe (pinned-thread mode maps each Python thread to
-            # its own JVM thread); a failure in ANY append fails the
-            # batch before the marker, exactly as the sequential form
-            # did, and the replay clears every partial segment.
-            # `parallel_appends=False` keeps the sequential form for A/B.
-            appends: list = []
-
-            if self.text_index:
-                # the curated batch becomes a name-keyed index segment:
-                # a replayed batch overwrites its own segment (converges),
-                # and the empty bootstrap generation means NO batch ever
-                # initializes the index from data — the crash window
-                # "init succeeded, marker didn't" can't double-count.
-                # (`fresh` is an eager localCheckpoint: lineage is
-                # truncated, so no write order can trigger a
-                # re-evaluation that would see the batch's own
-                # fingerprints — the pre-r11 eviction/recache hazards
-                # are structurally gone; lost blocks fail the job and
-                # the marker discipline replays it.)
-                from ..operators.search import append_text_index, init_text_index
-
-                def _do_text_index() -> None:
-                    if self._text_index_law is None:
-                        # one init + stats read per ingest OBJECT, not
-                        # per batch: n_buckets/positional are immutable
-                        # for the store's life (init fixes them,
-                        # compaction preserves them) — re-reading them
-                        # was two fixed collect jobs per batch
-                        info = init_text_index(
-                            spark,
-                            self.index_path,
-                            n_buckets=self.text_index_buckets,
-                        )
-                        self._text_index_law = (
-                            int(info["n_buckets"]),
-                            bool(info["positional"]),
-                        )
-                    append_text_index(
-                        fresh.select(
-                            "doc_id", F.col("clean_text").alias("text")
-                        ),
-                        self.index_path,
-                        seg,
-                        law=self._text_index_law,
-                        return_stats=False,
-                    )
-
-                appends.append(("text_index_append", _do_text_index))
-            embed_fallback = (
-                self.vector_index
-                and self.vec_col not in docs.columns
-                and self.embed_dim is not None
-            )
-            if self.vector_index and (
-                self.vec_col in docs.columns or embed_fallback
-            ):
-                # the curated batch's embeddings become a name-keyed
-                # segment of the stored vector index — same replay
-                # contract as the text index above. Init is
-                # bootstrap-only (seed centroids, no data), so a crashed
-                # init + replay cannot double-index; dim is inferred
-                # from the first embedded batch.
-                from ..operators.vecindex import (
-                    _gen_name as _vec_gen,
-                    append_vector_index,
-                    init_vector_index,
-                )
-
-                def _do_vector_index() -> None:
-                    if embed_fallback:
-                        # no embedding column in the stream: derive
-                        # vectors from the survivors' text with the
-                        # deterministic hashed-projection embedder (r11)
-                        # — the vector index runs on a TEXT-ONLY corpus
-                        # with no external model. Reading the persisted
-                        # `fresh` keeps the rebuild-from-survivors
-                        # contract of the other appends.
-                        from ..operators.similarity import (
-                            hashed_text_embeddings,
-                        )
-                        from ..plans.genstore import enforce_law
-
-                        # the embedding law is part of the store's key
-                        # space exactly like a band law: record at first
-                        # use, fail loudly on mismatch (see _embed_law)
-                        enforce_law(
-                            self.vector_index_path,
-                            self._embed_law(),
-                            marker=EMBED_LAW_MARKER,
-                            what="vector index embedding law",
-                        )
-                        vecs = (
-                            hashed_text_embeddings(
-                                fresh.select(
-                                    "doc_id",
-                                    F.col("clean_text").alias("text"),
-                                ),
-                                dim=self.embed_dim,
-                                ngram=self.embed_ngram,
-                            )
-                            .withColumnRenamed("embedding", self.vec_col)
-                            # exact-zero vectors (signs cancelled) carry
-                            # no signal and would cosine to NaN at probe
-                            .filter(F.exists(self.vec_col, lambda x: x != 0))
-                        )
-                    else:
-                        vecs = fresh.join(
-                            docs.select("doc_id", self.vec_col), "doc_id"
-                        ).filter(F.col(self.vec_col).isNotNull())
-                    if _vec_gen(self.vector_index_path) is None:
-                        probe_row = vecs.select(self.vec_col).first()
-                        if probe_row is not None:
-                            init_vector_index(
-                                spark,
-                                self.vector_index_path,
-                                dim=len(probe_row[0]),
-                                n_lists=self.vector_n_lists,
-                            )
-                    if _vec_gen(self.vector_index_path) is not None:
-                        append_vector_index(
-                            vecs.select("doc_id", self.vec_col),
-                            self.vector_index_path,
-                            seg,
-                            id_col="doc_id",
-                            vec_col=self.vec_col,
-                            # generation-keyed: a compaction between
-                            # batches invalidates it exactly
-                            centroid_cache=self._vec_centroid_cache,
-                        )
-
-                appends.append(("vector_index_append", _do_vector_index))
-            if host_on and self.host_links_col in docs.columns:
-                # the batch's host links accrete into the edge store the
-                # periodic rank recompute reads. Derived from the RAW
-                # batch (spam hosts' links inform the graph — that is
-                # how TrustRank isolates them), batch-keyed like every
-                # other append so a replay overwrites its own segment;
-                # duplicate edges across batches are harmless because
-                # the recompute reads the store as a SET (distinct).
-                from ..operators.graph import host_edges
-
-                def _do_host_edges() -> None:
-                    (
-                        host_edges(
-                            docs,
-                            host_col=self.host_col,
-                            links_col=self.host_links_col,
-                        )
-                        .withColumn("batch_id", F.lit(seg))
-                        .write.mode("append")
-                        .partitionBy("batch_id")
-                        .parquet(self.host_edges_path)
-                    )
-
-                appends.append(("host_edges_append", _do_host_edges))
-            if media_bands_on:
-                # survivors' band keys accrete into the phash band
-                # store, REBUILT from the checkpointed `fresh` (one
-                # Arrow hashing pass over the materialized survivors —
-                # rebuilding beats dragging the probe chain through the
-                # write: −21% on the all-stores integration test).
-                from ..operators.multimodal import (
-                    perceptual_hash as _ph,
-                    phash_band_keys as _pbk,
-                )
-
-                def _do_phash_bands() -> None:
-                    (
-                        _pbk(
-                            _ph(
-                                fresh.filter(
-                                    F.col(self.media_col).isNotNull()
-                                ).select(
-                                    F.col("doc_id").alias("media_id"),
-                                    self.media_col,
-                                ),
-                                backend=self.media_backend,
-                            ),
-                            bands=self.media_bands,
-                        )
-                        .select("bkey", "phash")
-                        .withColumn("batch_id", F.lit(seg))
-                        .write.mode("append")
-                        .partitionBy("batch_id")
-                        .parquet(self.phash_bands_path)
-                    )
-
-                appends.append(("phash_bands_append", _do_phash_bands))
-            if self.text_near_dedup:
-                # same rebuild-from-checkpoint shape as the phash store
-                from ..operators.dedup import minhash_band_rows as _mbr
-
-                def _do_text_bands() -> None:
-                    (
-                        _mbr(
-                            fresh.select(
-                                "doc_id", F.col("clean_text").alias("text")
-                            ),
-                            id_col="doc_id",
-                            k=self.text_minhash_k,
-                            bands=self.text_bands,
-                            w=self.text_shingle_w,
-                        )
-                        .select("bkey", "sig")
-                        .withColumn("batch_id", F.lit(seg))
-                        .write.mode("append")
-                        .partitionBy("batch_id")
-                        .parquet(self.text_bands_path)
-                    )
-
-                appends.append(("text_bands_append", _do_text_bands))
-
-            def _do_fps() -> None:
-                fps_out = fresh.select("fingerprint")
-                if media_on:
-                    fps_out = fps_out.unionByName(
-                        fresh.filter(F.col("media_fp").isNotNull()).select(
-                            F.col("media_fp").alias("fingerprint")
-                        )
-                    )
-                (
-                    fps_out.withColumn("batch_id", F.lit(seg))
-                    .write.mode("append")
-                    .partitionBy("batch_id")
-                    .parquet(self.fps_path)
-                )
-
-            appends.append(("fps_append", _do_fps))
-
-            def _timed_append(stage: str, fn) -> None:
-                t0 = _time.perf_counter()
-                fn()
-                walls[stage] = round(_time.perf_counter() - t0, 3)
-
-            if self.parallel_appends and len(appends) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                from pyspark import inheritable_thread_target
-
-                # inheritable_thread_target propagates THIS thread's
-                # JVM-local properties (the streaming job group,
-                # description, scheduler pool) AND the session's tags
-                # into the worker thread — without it, a
-                # StreamingQuery.stop() could no longer cancel
-                # in-flight append jobs and a FAIR pool would be
-                # silently dropped (r12 review); the session-form
-                # wrapper also carries interrupt tags. In legacy
-                # NON-pinned-thread mode (PYSPARK_PIN_THREAD=false)
-                # the session form returns the session itself, not a
-                # decorator (properties are process-global there, so
-                # there is nothing to propagate) — fall back to the
-                # plain callable rather than TypeError every batch
-                # (r12 advice).
-                deco = inheritable_thread_target(spark)
-                if not callable(deco) or isinstance(deco, SparkSession):
-                    deco = lambda f: f  # noqa: E731 — non-pinned mode
-                with ThreadPoolExecutor(
-                    max_workers=len(appends),
-                    thread_name_prefix="store-append",
-                ) as ex:
-                    futures = [
-                        ex.submit(deco(_timed_append), s, fn)
-                        for s, fn in appends
-                    ]
-                    # surface the FIRST failure after all settle (each
-                    # append owns its segment; partial writes are
-                    # cleared by the replay) — the marker below is
-                    # reached only if every append succeeded
-                    for fu in futures:
-                        fu.result()
-            else:
-                for s, fn in appends:
-                    _timed_append(s, fn)
-            _mark("store_appends_total")
-            # the observability record (r11): every tap was populated
-            # by the curated write's job above (Observation.get is
-            # already resolved — no extra Spark action), and the row
-            # lands INSIDE the commit envelope (cleared on replay,
-            # sealed by the marker below) so redelivery leaves
-            # exactly one stats row per batch. Written DRIVER-SIDE
-            # with pyarrow (r12 floor cut): a
-            # createDataFrame([row]).write job measured 4-5 s of
-            # pure overhead (Python-RDD conversion + job scheduling)
-            # for one row — ~20% of the all-stores per-batch floor.
-            # session.local_frame is the general fix for the
-            # Python-RDD part; this write stays driver-side because
-            # a Spark write of even a local relation is still a job.
-            self._write_stats_row_driver_side(
-                self._ingest_stats_row(taps), seg
-            )
-            _mark("stats_row_write")
-            if batch_id is not None:
-                self._write_marker(seg)
-        finally:
-            # free every checkpoint valve's blocks NOW — each batch took
-            # up to three (plan-size valves + the final materialization)
-            for df_ in ckpts:
-                _free_local_checkpoint(df_)
-
-    # -- per-batch observability (r11) -------------------------------------
+    # -- per-batch observability ---------------------------------------------
 
     def _write_stats_row_driver_side(self, row: tuple, seg: str) -> None:
-        """One pyarrow parquet file under ``batch_id=<seg>/`` with types
-        matching ``_INGEST_LOG_SCHEMA`` exactly (double/string/int64/
-        int32), so Spark's partitioned read sees the same table a
-        ``createDataFrame().write`` produced — minus that job's 4-5 s of
-        driver-side overhead for a single row. The file lands inside the
-        commit envelope like every other segment (cleared on replay,
-        sealed by the marker)."""
+        """One pyarrow parquet file under ``batch_id=<seg>/`` typed by
+        ``_INGEST_LOG_SCHEMA``, so Spark's partitioned read sees the
+        table a ``createDataFrame().write`` would produce, without a
+        Spark job for one row. The file lands inside the commit envelope
+        like every other segment (cleared on replay, sealed by the
+        marker)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        _PA_TYPES = {"double": pa.float64(), "string": pa.string(),
-                     "long": pa.int64(), "int": pa.int32()}
-        fields = []
-        for part in _INGEST_LOG_SCHEMA.split(","):
-            name, typ = part.strip().rsplit(" ", 1)
-            fields.append(pa.field(name, _PA_TYPES[typ], nullable=True))
+        schema = to_arrow_schema(StructType.fromDDL(_INGEST_LOG_SCHEMA))
         table = pa.table(
-            {f.name: [v] for f, v in zip(fields, row)},
-            schema=pa.schema(fields),
+            {f.name: [v] for f, v in zip(schema, row)}, schema=schema
         )
         seg_dir = os.path.join(self.ingest_log_path, f"batch_id={seg}")
         storeio_for(seg_dir).makedirs(seg_dir)
@@ -1487,7 +1143,7 @@ class CurationIngest:
             # nothing new and no age horizon to apply: re-folding the
             # existing generation would be a full read+write job and a
             # pointer swap for zero data change — a periodic maintain
-            # with no new batches must be a no-op (r12 review)
+            # with no new batches must be a no-op
             return {
                 "folded_segments": 0,
                 "generation": gen,
@@ -1542,7 +1198,7 @@ class CurationIngest:
         only exists because the whole funnel body completed). A crashed
         streaming attempt whose stream never restarts leaves a stats
         row with no marker; counting it would inflate lifetime totals
-        past the 'one row per committed batch' contract (r11 advice).
+        past the 'one row per committed batch' contract.
         The isin list is the marker directory listing — batches-sized,
         like the log itself."""
         live = (
@@ -1569,7 +1225,7 @@ class CurationIngest:
         from ..plans.genstore import gen_name, live_segments
 
         def _keyed_live(path: str) -> int:
-            # grace-window retirees (r14) are folded, present-on-disk
+            # grace-window retirees are folded, present-on-disk
             # parts — not live, and must not trip the lapsed-compaction
             # alarm for the 300 s after every fold
             retired = self._retired_paths(path)
@@ -1618,7 +1274,7 @@ class CurationIngest:
         bounded aggregate over the (batches-sized) log table, restricted
         to COMMITTED batches. ``segment_alarms`` names any store whose
         live-segment count exceeds ``max_live_segments`` — the signal
-        that its compaction job has lapsed (r11 verdict item 5)."""
+        that its compaction job has lapsed."""
         log = self._committed_ingest_log(spark)
         drop_cols = [f"dropped_{g}" for g in _INGEST_GATES]
         agg = log.agg(
@@ -1778,7 +1434,7 @@ class CurationIngest:
         """Derived from the SAME attributes every minhash call site uses,
         so a parameter change shifts the law string in lockstep with the
         bkey space it guards — a frozen literal here once let dedup.py
-        defaults drift under a still-matching law (r10 advice)."""
+        defaults drift under a still-matching law."""
         return (
             f"minhash|k={self.text_minhash_k}|bands={self.text_bands}"
             f"|w={self.text_shingle_w}"
@@ -1827,7 +1483,7 @@ class CurationIngest:
 
     def _retired_paths(self, path: str, *, part_dir: str | None = None) -> set:
         """Paths the store's committed retire manifest lists — folded
-        inputs inside their reader grace window (r14). Present on disk
+        inputs inside their reader grace window. Present on disk
         for in-flight readers, but excluded from fold inputs and fresh
         probes (their rows already live in the folded part)."""
         from ..plans.genstore import read_retire_manifest
@@ -1843,7 +1499,7 @@ class CurationIngest:
         superseded ``table:<name>`` catalog entries) once their retire
         stamp has aged past the grace window — run at the start of the
         next compaction, so a retiree is never deleted under a probe
-        that resolved it within the window (r13 verdict item 4)."""
+        that resolved it within the window."""
         import time as _t
 
         from ..plans.genstore import (
@@ -1946,7 +1602,7 @@ class CurationIngest:
         # same atomic commit as the generational stores, different
         # pointer file: _STORE names a catalog table, not a gen dir
         swap_pointer(path, new_table, marker=_STORE_POINTER)
-        # reader grace window (r13 verdict item 4): a concurrent
+        # reader grace window: a concurrent
         # batch's store probe that resolved the OLD table + segment
         # list must finish against intact parts, so the folded
         # segments and the superseded catalog table are RETIRED (root
@@ -2071,7 +1727,7 @@ class CurationIngest:
         the sequence, not per compactor).
 
         ``with maintenance_lease() as lease:`` yields a TOKEN object
-        (r13 verdict item 5): pass it as ``lease=`` to each
+       : pass it as ``lease=`` to each
         maintenance method. A maintenance method invoked WITHOUT a
         token while a ``.maintain_lock`` exists warns — or raises
         under ``strict_lease=True`` — because that is exactly the
@@ -2457,3 +2113,72 @@ class CurationIngest:
                 len(seeds_present) if seeds_present is not None else 0
             ),
         }
+
+
+def _always(ing: CurationIngest, b: _Batch) -> bool:
+    return True
+
+
+def _text_near(ing: CurationIngest, b: _Batch) -> bool:
+    return ing.text_near_dedup
+
+
+def _media_near(ing: CurationIngest, b: _Batch) -> bool:
+    return b.media_bands
+
+
+_GATES = (
+    _Gate("in", _always, CurationIngest._gate_scrub),
+    _Gate("policy", _always, CurationIngest._gate_policy),
+    _Gate("host", lambda ing, b: b.ranks is not None, CurationIngest._gate_host),
+    _Gate("exact_text", _always, CurationIngest._gate_exact_text),
+    _Gate("exact_media", lambda ing, b: b.media_on, CurationIngest._gate_exact_media),
+    _Gate("store_dup", _always, CurationIngest._gate_store_dup),
+    _Gate("text_near_batch", _text_near, CurationIngest._gate_text_near_batch, near=True),
+    _Gate("text_near_store", _text_near, CurationIngest._gate_text_near_store, near=True),
+    # phash_near_dup's max_band_freq counts band frequency over its input
+    _Gate(
+        "media_near_batch", _media_near, CurationIngest._gate_media_near_batch,
+        near=True, survivors=lambda ing: ing.media_max_band_freq is not None,
+    ),
+    _Gate("media_near_store", _media_near, CurationIngest._gate_media_near_store, near=True),
+)
+
+# (name, enabled, fn(ing, batch)); independent of each other, so
+# run_sinks may run them concurrently, and the commit marker is written
+# only after all of them succeed
+_SINKS = (
+    ("curated_append", _always,
+     lambda ing, b: _append_segment(b.fresh, ing.curated_path, b.seg)),
+    ("text_index_append", lambda ing, b: ing.text_index,
+     CurationIngest._sink_text_index),
+    ("vector_index_append",
+     lambda ing, b: ing.vector_index
+     and (ing.vec_col in b.docs.columns or ing.embed_dim is not None),
+     CurationIngest._sink_vector_index),
+    ("host_edges_append",
+     lambda ing, b: b.host_on and ing.host_links_col in b.docs.columns,
+     CurationIngest._sink_host_edges),
+    ("phash_bands_append", _media_near,
+     lambda ing, b: _append_segment(
+         ing._media_band_rows(b.fresh).select("bkey", "phash"),
+         ing.phash_bands_path, b.seg)),
+    ("text_bands_append", _text_near,
+     lambda ing, b: _append_segment(
+         ing._text_band_rows(b.fresh).select("bkey", "sig"),
+         ing.text_bands_path, b.seg)),
+    ("fps_append", _always, CurationIngest._sink_fingerprints),
+)
+
+# one row per committed batch in ingest_log/, the funnel's per-gate
+# health record: rows in, each later gate's drop (0 when the gate is off,
+# keeping the schema stable for dashboards), admitted, and store segment
+# tallies. A near-dedup store that silently admits everything shows as
+# its dropped_*_store flatlining at 0 while the corpus grows.
+_INGEST_GATES = tuple(g.name for g in _GATES[1:])
+_INGEST_LOG_SCHEMA = ", ".join(
+    ["ts double", "run_id string", "rows_in long"]
+    + [f"dropped_{g} long" for g in _INGEST_GATES]
+    + ["admitted long", "fps_segments int", "curated_segments int",
+       "text_band_segments int", "phash_band_segments int"]
+)

@@ -35,10 +35,13 @@ kafka_flush_interval_ms / kafka_max_block_size settings
 from __future__ import annotations
 
 import os
+import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -47,6 +50,7 @@ from ..functions.cleanse import cleanse
 from ..operators.combined import to_combined
 from ..operators.latest import recency_filter
 from ..plans import tables
+from ..plans.genstore import fold_generation, gc_orphan_generations, gen_name
 from ..schemas import clean_schema, combined_schema
 
 
@@ -68,28 +72,61 @@ def _checkpoint_run_id(checkpoint_dir: str) -> str:
     return run_id.strip()
 
 
-def _swap_generation(df: DataFrame, path: str) -> None:
-    """Generational overwrite behind an atomic pointer (the
-    fingerprint-store discipline): the new generation is fully written,
-    then one atomic pointer publish, then old generations are GC'd — a
-    crash mid-refresh leaves the previous generation readable and a
-    replay converges."""
-    from ..plans.storeio import storeio_for
+def run_sinks(spark, sinks, *, parallel: bool = True) -> dict[str, float]:
+    """Run a batch's independent sinks ``[(name, fn), ...]`` and return
+    each one's wall seconds by name.
 
-    io = storeio_for(path)
-    gen = f"gen-{uuid.uuid4().hex[:12]}"
-    df.write.mode("overwrite").parquet(os.path.join(path, gen))
-    io.write_atomic(os.path.join(path, "_CURRENT"), gen)
-    for e in io.listdir(path):
-        if e.startswith("gen-") and e != gen:
-            io.rmtree(os.path.join(path, e))
+    With ``parallel`` and more than one sink, each sink runs on its own
+    driver thread, so one sink's job tail leaves executors idle that the
+    next sink's tasks back-fill. Each thread gets its own copy of the
+    calling thread's Spark local properties and session tags
+    (``inheritable_thread_target``): the streaming query's job group, so
+    ``StreamingQuery.stop()`` cancels in-flight sink jobs, and a FAIR
+    scheduler pool. In non-pinned thread mode (``PYSPARK_PIN_THREAD=false``)
+    properties are process-global and the plain callable runs. Every sink
+    settles before the first failure is raised, so a failed batch leaves
+    no sink still writing and its replay converges each sink on its own.
+    """
+    walls: dict[str, float] = {}
+
+    def timed(name: str, fn) -> None:
+        t0 = time.perf_counter()
+        fn()
+        walls[name] = round(time.perf_counter() - t0, 3)
+
+    if not parallel or len(sinks) < 2:
+        for name, fn in sinks:
+            timed(name, fn)
+        return walls
+
+    def inherit(fn):
+        deco = inheritable_thread_target(spark)
+        return fn if isinstance(deco, SparkSession) else deco(fn)
+
+    with ThreadPoolExecutor(max_workers=len(sinks), thread_name_prefix="sink") as ex:
+        futures = [ex.submit(inherit(timed), name, fn) for name, fn in sinks]
+        for fu in futures:
+            fu.result()
+    return walls
 
 
-def _read_generation(spark, path: str) -> DataFrame:
-    from ..plans.storeio import storeio_for
+def _refresh_board(df: DataFrame, path: str) -> None:
+    """Rewrite a derived live board as a new generation behind the
+    ``genstore`` pointer: a crash mid-refresh leaves the previous board
+    readable, and the superseded board stays on disk for the reader
+    grace window, so a query that resolved it finishes its scan."""
+    old = gen_name(path)
+    gc_orphan_generations(path, old)
+    fold_generation(
+        path,
+        lambda out: df.write.mode("overwrite").parquet(out),
+        manifest=False,
+        gc_paths=[os.path.join(path, old)] if old else [],
+    )
 
-    gen = storeio_for(path).read_text(os.path.join(path, "_CURRENT")).strip()
-    return spark.read.parquet(os.path.join(path, gen))
+
+def _read_board(spark, path: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(path, gen_name(path)))
 
 
 class IngestPipeline:
@@ -147,55 +184,30 @@ class IngestPipeline:
         # current_timestamp() ingestion_time
         clean.persist()
         try:
-            # The three MVs are mutually independent — different target
-            # paths, separate writer locks, each replay-convergent on
-            # its own — so their jobs OVERLAP from a small thread pool
-            # (guide §2.6): each sink's tail leaves executors idle that
-            # the next sink's tasks back-fill; serial execution paid
-            # three full job latencies per micro-batch. Crash semantics
-            # are unchanged: any sink failing fails the batch, and a
-            # foreachBatch redelivery converges per sink exactly as
-            # before (batch-keyed history segment, idempotent upserts).
-            # Calls go through the module attribute so test
-            # crash-injection monkeypatching still intercepts them.
-            from concurrent.futures import ThreadPoolExecutor
-
+            # The three MVs are mutually independent (different target
+            # paths, separate writer locks, each replay-convergent on its
+            # own), so run_sinks overlaps their jobs; any sink failing
+            # fails the batch. Each sink looks tables.append_history /
+            # tables.upsert_state up on the module when it runs, so a
+            # monkeypatched attribute (crash injection, tracing) is the
+            # one called.
             combined = to_combined(clean, now=self._now_col())
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                sinks = [
-                    # MV 1: history append (schema-local.sql:199-293 →
-                    # 183-187); batch-keyed → replay overwrites instead
-                    # of duplicating
-                    pool.submit(
-                        tables.append_history,
-                        clean,
-                        self.history_path,
-                        batch_id=self._scoped_batch(batch_id),
-                    ),
-                    # MV 2: current-state upsert (schema-local.sql:384-446
-                    # → 370-372)
-                    pool.submit(
-                        tables.upsert_state,
-                        clean,
-                        self.state_path,
-                        ttl=self.cfg.state_ttl,
-                        now=self.now,
-                    ),
-                    # MV 3: combined projection upsert
-                    # (schema-global-combined.sql:42-108)
-                    pool.submit(
-                        tables.upsert_state,
-                        combined,
-                        self.combined_path,
-                        ttl="1 hour",
-                        now=self.now,
-                    ),
-                ]
-                # surface the FIRST failure (after letting all finish —
-                # the pool's __exit__ joins anyway) so a crashed sink
-                # fails the batch exactly like the serial cascade did
-                for f in sinks:
-                    f.result()
+            scoped = self._scoped_batch(batch_id)
+            run_sinks(clean.sparkSession, [
+                # MV 1: history append (schema-local.sql:199-293 →
+                # 183-187); batch-keyed → replay overwrites instead of
+                # duplicating
+                ("history", lambda: tables.append_history(
+                    clean, self.history_path, batch_id=scoped)),
+                # MV 2: current-state upsert (schema-local.sql:384-446 →
+                # 370-372)
+                ("state", lambda: tables.upsert_state(
+                    clean, self.state_path, ttl=self.cfg.state_ttl, now=self.now)),
+                # MV 3: combined projection upsert
+                # (schema-global-combined.sql:42-108)
+                ("combined", lambda: tables.upsert_state(
+                    combined, self.combined_path, ttl="1 hour", now=self.now)),
+            ])
             # derived live view: conflicts among CURRENT positions. Runs
             # after the state upsert so the batch's own reports are in
             # play; cost is bounded by the active-aircraft count (the
@@ -211,9 +223,7 @@ class IngestPipeline:
     def _refresh_conflicts(self, spark) -> None:
         """Rewrite the conflicts table from the current *_latest view:
         the grid-bucketed proximity self-join (operators/geo.py) over one
-        row per active aircraft. Generational write + atomic pointer swap
-        (the fingerprint-store discipline): a crash mid-refresh leaves
-        the previous generation readable, a replay converges."""
+        row per active aircraft, written by ``_refresh_board``."""
         from ..operators.geo import proximity_pairs
 
         cur = self.latest(spark).filter(
@@ -226,12 +236,12 @@ class IngestPipeline:
             carry_cols=("lat", "lon"),
             max_cell_freq=self.conflict_max_cell_freq,
         )
-        _swap_generation(pairs, self.conflicts_path)
+        _refresh_board(pairs, self.conflicts_path)
 
     def _refresh_zones(self, spark) -> None:
         """Rewrite the zone-occupancy table from the current *_latest
         view: compiled point-in-polygon containment over one row per
-        active aircraft — same generational discipline as conflicts."""
+        active aircraft, written by ``_refresh_board``."""
         from ..operators.geo import points_in_polygons
 
         cur = self.latest(spark).filter(
@@ -240,17 +250,17 @@ class IngestPipeline:
         occ = points_in_polygons(
             cur.select("icao24", "lat", "lon"), self.geofences
         ).select("icao24", "poly_id", "lat", "lon")
-        _swap_generation(occ, self.zones_path)
+        _refresh_board(occ, self.zones_path)
 
     def conflicts(self, spark) -> DataFrame:
         """The live conflict board: (icao24_a, icao24_b, dist_nm, lat/lon
         of both) pairs currently within the configured radius."""
-        return _read_generation(spark, self.conflicts_path)
+        return _read_board(spark, self.conflicts_path)
 
     def zones(self, spark) -> DataFrame:
         """The live geofence board: (icao24, poly_id, lat, lon) — every
         aircraft currently inside a configured zone."""
-        return _read_generation(spark, self.zones_path)
+        return _read_board(spark, self.zones_path)
 
     # -- streaming entry ----------------------------------------------------
 

@@ -167,14 +167,27 @@ def test_streaming_restart_same_checkpoint_no_dup_no_loss(spark, tmp_base):
     assert n2 == raw1.count() + raw2.count()
 
 
-def test_streaming_cascade_file_source(spark, tmp_base):
+def test_streaming_cascade_file_source(spark, tmp_base, monkeypatch):
     """Drive the cascade through an actual streaming query (file source
-    stands in for Kafka; identical downstream plan)."""
+    stands in for Kafka; identical downstream plan). Every sink runs in
+    the query's job group, so ``StreamingQuery.stop()`` can cancel its
+    in-flight jobs."""
     in_dir = os.path.join(tmp_base, "incoming")
     os.makedirs(in_dir)
     raw = raw_batch(spark, GLOBAL_STREAM, n_aircraft=20, n_scrapes=2)
     raw.coalesce(1).write.mode("overwrite").json(os.path.join(in_dir, "b1"))
 
+    groups = []
+
+    def recording(fn):
+        def wrapped(*a, **kw):
+            groups.append(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+            return fn(*a, **kw)
+
+        return wrapped
+
+    monkeypatch.setattr(tables, "append_history", recording(tables.append_history))
+    monkeypatch.setattr(tables, "upsert_state", recording(tables.upsert_state))
     pipe = IngestPipeline(GLOBAL_STREAM, tmp_base, now=NOW)
     stream = stream_json_lines(spark, os.path.join(in_dir, "b1"), GLOBAL_STREAM)
     q = pipe.start(stream, os.path.join(tmp_base, "ckpt"))
@@ -182,6 +195,8 @@ def test_streaming_cascade_file_source(spark, tmp_base):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert len(groups) >= 3  # history, state and combined of each batch
+    assert set(groups) == {str(q.runId)}
     state = tables.read_state(spark, pipe.state_path)
     assert state.count() > 0
     assert state.groupBy("icao24").count().filter("count > 1").count() == 0
@@ -319,8 +334,53 @@ def test_conflict_refresh_is_replay_safe(spark, tmp_base):
     pipe.process_batch(raw, batch_id=0)  # foreachBatch redelivery
     got = pipe.conflicts(spark).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {("aaa111", "bbb222")}
-    gens = [e for e in os.listdir(pipe.conflicts_path) if e.startswith("gen-")]
-    assert len(gens) == 1  # old generations GC'd after the pointer swap
+    _assert_superseded_boards_retired(pipe.conflicts_path)
+
+
+def _assert_superseded_boards_retired(path):
+    """Every superseded board generation is on the current one's retire
+    manifest, and the grace-window sweep leaves only the current one."""
+    from adsb_clickhouse_spark.plans.genstore import (
+        gen_name,
+        read_retire_manifest,
+        sweep_retired,
+    )
+    from adsb_clickhouse_spark.plans.storeio import storeio_for
+
+    current = gen_name(path)
+    old = {os.path.join(path, e) for e in os.listdir(path) if e.startswith("gen-")}
+    old.discard(os.path.join(path, current))
+    assert old  # the refresh ran more than once
+    retired = {p for _ts, p in read_retire_manifest(os.path.join(path, current), storeio_for(path))}
+    assert retired == old
+    sweep_retired(path, grace_s=0)
+    assert [e for e in os.listdir(path) if e.startswith("gen-")] == [current]
+
+
+def test_superseded_conflict_board_stays_readable(spark, tmp_base):
+    """A board frame resolved before the next batch's refresh still
+    collects afterwards: the superseded generation stays on disk for the
+    reader grace window."""
+    from datetime import timedelta
+
+    pipe = IngestPipeline(
+        GLOBAL_STREAM, tmp_base, now=NOW, run_id="runG", conflict_radius_nm=15.0
+    )
+    pipe.process_batch(
+        _raw_positions(
+            spark,
+            [("aaa111", 40.0, -73.0), ("bbb222", 40.05, -73.0)],
+            NOW - timedelta(seconds=30),
+        ),
+        batch_id=0,
+    )
+    board = pipe.conflicts(spark)
+    pipe.process_batch(
+        _raw_positions(spark, [("bbb222", 45.0, -60.0)], NOW - timedelta(seconds=20)),
+        batch_id=1,
+    )
+    assert pipe.conflicts(spark).count() == 0
+    assert {(r["id_a"], r["id_b"]) for r in board.collect()} == {("aaa111", "bbb222")}
 
 
 def test_live_geofence_board_surfaces_and_clears(spark, tmp_base):
@@ -350,5 +410,4 @@ def test_live_geofence_board_surfaces_and_clears(spark, tmp_base):
         batch_id=1,
     )
     assert pipe.zones(spark).count() == 0
-    gens = [e for e in os.listdir(pipe.zones_path) if e.startswith("gen-")]
-    assert len(gens) == 1  # generational swap GC'd the old board
+    _assert_superseded_boards_retired(pipe.zones_path)

@@ -943,9 +943,13 @@ def test_fused_valves_match_legacy_two_checkpoint_path(spark, tmp_path):
     results = {}
     for mode, fused in (("fused", True), ("legacy", False)):
         base = tmp_path / mode
+        # the legacy path runs under a configured media hot-band valve;
+        # no band of these 4-row batches comes near 10 000, so the pair
+        # set is the unvalved one
         ing = CurationIngest(
             str(base), run_id="r1", media_dedup=True, media_near_dedup=True,
-            text_near_dedup=True, fused_valves=fused,
+            text_near_dedup=True,
+            media_max_band_freq=None if fused else 10_000,
         )
         walls = {}
         for bid, rows in ((0, b0), (1, b1)):
@@ -986,12 +990,11 @@ def test_fused_valves_fall_back_under_media_hot_band_valve(spark, tmp_path):
     """phash_near_dup's max_band_freq counts band frequency over its
     INPUT, so the fused pair set (over the pre-text base) is not
     restriction-stable — with the hot-band valve configured alongside
-    text near-dedup the funnel must keep the legacy second checkpoint
-    even when fused_valves=True."""
+    text near-dedup the funnel must keep the legacy second checkpoint."""
     A, B, Bp, C = _media_payloads()
     ing = CurationIngest(
         str(tmp_path), run_id="r1", media_dedup=True, media_near_dedup=True,
-        text_near_dedup=True, media_max_band_freq=64, fused_valves=True,
+        text_near_dedup=True, media_max_band_freq=64,
     )
     ing.process_batch(
         spark.createDataFrame(
